@@ -4,10 +4,14 @@ Pure-Python planning kernel. Mirrors the *semantics* of the reference's
 ``Range`` / ``RangeBag`` (``/root/reference/src/archiver/range.rs:42-261``,
 ``src/archiver/range_bag.rs:7-95``) with a different implementation: the
 reference compacts range bags with an O(n^2) fixpoint loop; here it's an
-O(n log n) sort-and-sweep. Data-plane interval work (islands over millions of
-heights) lives in ``operators.intervals`` as distributed DataFrame SQL — this
-module only handles plan-time metadata (requested ranges, chunk boundaries),
-which is always driver-small.
+O(n log n) sort-and-sweep.
+
+It serves everything that is driver-small: requested ranges and chunk
+boundaries at plan time, and the file inventories of verify and fix — one
+row per ≤1000-block file, a few dozen per chunk — whose islands and gaps
+``core.groups`` computes with ``merge_ranges`` and ``subtract_ranges``
+instead of Spark jobs. Data-plane interval work (islands over millions of
+heights) lives in ``operators.intervals`` as distributed DataFrame SQL.
 """
 
 from __future__ import annotations

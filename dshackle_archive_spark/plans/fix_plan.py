@@ -1,12 +1,15 @@
 """``fix`` — detect and re-archive missing data (reference
 ``src/command/fix.rs:39-69``).
 
-Spark shape (SURVEY §3.3.4): the gap work list comes straight from
-``find_incomplete_tables`` (closed-form interval SQL over the inventory);
-all missing ranges of one kind are re-archived in ONE fetch+write job
-(``overwrite=False`` so racing writers keep existing files, S13), narrowed
-to only the missing kinds (``only_include``, P6). The reference loops gap by
-gap — fine for its in-process writes, but a fragmented archive (thousands of
+The gap work list is computed on the driver with no Spark job: per kind,
+the requested range minus every listed file's range
+(``core.groups.missing_ranges`` over ``sources.archive.inventory_rows``,
+i.e. ``core.ranges.subtract_ranges``; the inventory is one row per file,
+metadata-scale). All missing ranges of one kind are then re-archived in ONE
+fetch+write job (``overwrite=False`` so racing writers keep existing files,
+S13), narrowed to only the missing kinds (``only_include``, P6), and the
+writes of every kind run under one collect. The reference loops gap by gap
+— fine for its in-process writes, but a fragmented archive (thousands of
 small gaps) would serialize thousands of ~100 ms Spark job launches; here
 the gap list is the partition domain of a single job per kind.
 """
@@ -18,10 +21,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from ..core.filenames import DataKind
+from ..core.groups import missing_ranges
 from ..core.ranges import Range, merge_ranges
-from ..operators.inventory import find_incomplete_tables
 from ..sources import ref_layout
-from ..sources.archive import inventory_df
+from ..sources.archive import inventory_rows
 from ..sources.fetcher import FetchPolicy, fetch_blocks, fetch_table_for_heights
 from .archive_plan import ArchiveResult
 
@@ -46,18 +49,17 @@ def fix(
     fmt: str = "parquet",
     compression: str = "zstd",
 ) -> FixResult:
-    inv = inventory_df(spark, root, provider.blockchain_id)
     kinds = tuple(k.value for k in tables)
-    missing = find_incomplete_tables(inv, rng.start, rng.end, kinds=kinds)
-    work = sorted(
-        ((r["kind"], r["start"], r["end"]) for r in missing.collect()),
-        key=lambda t: (t[1], t[0]),
+    missing = missing_ranges(
+        inventory_rows(root, provider.blockchain_id), rng.start, rng.end, kinds
     )
+    work = sorted(missing, key=lambda t: (t[1], t[0]))
     results: list[ArchiveResult] = []
     if not dry_run:
         by_kind: dict[str, list[Range]] = {}
         for kind, lo, hi in work:
             by_kind.setdefault(kind, []).append(Range(lo, hi))
+        writes = None
         for kind, ranges in by_kind.items():
             merged = merge_ranges(ranges)
             # file pieces: gaps cut at absolute chunk boundaries, so restored
@@ -79,7 +81,11 @@ def fix(
                 fmt=fmt,
                 compression=compression,
             )
-            rows = wr.collect()
+            writes = wr if writes is None else writes.unionByName(wr)
+        # every kind's fetch+write runs in the one collect
+        all_rows = writes.collect() if writes is not None else []
+        for kind in by_kind:
+            rows = [r for r in all_rows if r["type"] == kind]
             notif = ref_layout.notifications_df(
                 spark.createDataFrame(rows, ref_layout.WRITE_RESULT_SCHEMA)
             )

@@ -1,22 +1,36 @@
 """``verify`` — integrity audit with destructive repair (reference
 ``src/command/verify.rs:409-477`` lifecycle, SURVEY §3.3).
 
-Pipeline (every check is a DataFrame predicate; the only driver-side data is
-metadata-scale: group lists, delete lists, chain-head lookups):
+Two phases.
 
-1. inventory in scope (P2 range-intersection filter)
-2. duplicate same-kind files per (range, hash) → both deleted (J3 dup rule)
+Driver phase — plain Python over the inventory rows of the scope
+(``sources.archive.inventory_rows``, a few dozen per chunk) with the
+``core.groups`` kernel; no Spark job:
+
+1. inventory in scope (P2 range-intersection filter), capped at
+   ``$SPARK_GRAFT_VERIFY_MAX_DRIVER_ROWS`` rows
+2. duplicate same-kind files per (range, hash) → those files deleted (J3)
 3. fork resolution for single-block groups: keep the hash matching the live
-   chain, delete losers (J4)
+   chain, delete losers (J4); a height's hashless single files (txes and
+   traces carry no hash in their name) then join its surviving hash group
 4. overlapping ranges → keep largest covering (W3)
 5. completeness: groups missing expected kinds → skipped (or deleted with
    ``fix_clean``) (A4)
-6. content verification per surviving group:
-   blocks — dup heights (A5), count==range (A6), parent-hash chain linkage
-   (W1), payload non-empty/non-"null" (P5), head hash vs live chain (J5);
-   txes/traces — txid set equality both directions vs the tx lists parsed
-   out of the blocks' JSON (J1/J2), payload null checks
-7. failing groups → file delete list, honoring dry-run
+6. surviving groups of ≤10 blocks merge into islands (W4); every file to
+   read is tagged with its island
+
+Spark phase — ONE fused content query over the surviving files, each row
+carrying its island's ``g_start``/``g_end`` from the read, with one collect
+of one stats row per island and check:
+
+7. blocks — dup heights (A5), count==range (A6), parent-hash chain linkage
+   across the island (W1), payload non-empty/non-"null" (P5), head hash vs
+   live chain (J5, compared on the driver);
+   txes/traces — one tagged union of the txids the blocks' JSON expects
+   and the txids the files hold, grouped by (island, txid): missing and
+   unexpected txids (J1/J2), duplicates, payload null checks
+8. failing islands → all their member groups' files deleted, honoring
+   dry-run (or pruned from the snapshot)
 """
 
 from __future__ import annotations
@@ -28,9 +42,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..core.filenames import DataKind
+from ..core.groups import group_files, largest_covering, small_islands
 from ..core.ranges import Range
-from ..operators.inventory import group_ranges
-from ..sources.archive import delete_files, inventory_df
+from ..sources.archive import delete_files, inventory_rows
 
 
 @dataclass
@@ -60,16 +74,15 @@ DEFAULT_VERIFY_DRIVER_ROWS = 100_000
 def _bounded_collect(df: DataFrame, what: str) -> list:
     """Collect driver-side verify metadata under an ENFORCED ceiling.
 
-    The driver-state invariant (round-11 task): ``verify`` collects only
-    PER-CHUNK inventories — path lists, group keys, chunk-end scalars,
-    delete lists — whose size is set by chunking discipline (≤ ~1000
-    files per chunk at reference layout), never by data volume. Before
-    this guard the invariant was implicit: a caller handing verify an
-    unchunked fleet-scale scope would silently materialize a huge list on
-    the driver. Now every metadata collect routes here; the cap
+    The driver-state invariant: ``verify`` holds only PER-CHUNK metadata —
+    the in-scope inventory, group keys, chunk-end scalars, delete lists —
+    whose size is set by chunking discipline (≤ ~1000 files per chunk at
+    reference layout), never by data volume. The cap
     (``$SPARK_GRAFT_VERIFY_MAX_DRIVER_ROWS``, default 100k — two orders
-    above any disciplined chunk) is pushed into the plan as a LIMIT, so
-    an absurd scope fails loudly after cap+1 rows instead of OOMing."""
+    above any disciplined chunk) bounds the in-scope inventory rows of
+    ``verify`` (checked in ``_triage``) and this collect, where it is
+    pushed into the plan as a LIMIT, so an absurd scope fails loudly after
+    cap+1 rows instead of OOMing."""
     from ..core.env import env_int
 
     cap = env_int(VERIFY_DRIVER_ROWS_ENV, DEFAULT_VERIFY_DRIVER_ROWS)
@@ -81,32 +94,6 @@ def _bounded_collect(df: DataFrame, what: str) -> list:
             f"or raise ${VERIFY_DRIVER_ROWS_ENV}"
         )
     return rows
-
-
-def _read_kind(spark, base: str, inv: DataFrame, kind: str) -> DataFrame | None:
-    from ..sources.avro_io import read_archive_data
-
-    paths = [
-        r["path"]
-        for r in _bounded_collect(
-            inv.filter(F.col("kind") == kind).select("path"),
-            f"{kind} path list",
-        )
-    ]
-    if not paths:
-        return None
-    full = [os.path.join(base, p) for p in paths]
-    df = read_archive_data(spark, full, kind)
-    # attach the owning group's range via the inventory. Basenames are unique
-    # within a kind (they encode range+hash), so this is a broadcast HASH
-    # join on the basename — not a nested-loop LIKE scan.
-    inv_k = inv.filter(F.col("kind") == kind).select(
-        F.element_at(F.split(F.col("path"), "/"), -1).alias("_base"),
-        F.col("start").alias("g_start"),
-        F.col("end").alias("g_end"),
-    )
-    df = df.withColumn("_base", F.element_at(F.split(F.col("_path"), "/"), -1))
-    return df.join(F.broadcast(inv_k), "_base", "left").drop("_base")
 
 
 def verify_native(
@@ -196,6 +183,276 @@ def verify_native(
     )
 
 
+ISLAND = ["g_start", "g_end"]
+# W4 (verify.rs:237-267): adjacent groups of at most this many blocks are
+# content-checked as one island, so the parent-hash chain check spans file
+# boundaries (a break between two 10-block files is invisible per group)
+SMALL_GROUP_BLOCKS = 10
+# payload columns whose null/empty/"null" values fail a txid kind (P5)
+TX_PAYLOADS = {"transactions": ("json", "raw"), "traces": ("traceJson", "stateDiffJson")}
+TX_REASONS = {"transactions": "txes_content", "traces": "traces_content"}
+
+
+@dataclass
+class _Triage:
+    """The driver phase's verdicts and the content work it leaves."""
+
+    groups_total: int = 0
+    failures: list[dict] = field(default_factory=list)
+    to_delete: set[str] = field(default_factory=set)
+    failed_keys: set[tuple[int, int]] = field(default_factory=set)
+    # kind -> (path, island start, island end) of every surviving file
+    reads: dict[str, list[tuple[str, int, int]]] = field(default_factory=dict)
+    # island -> (path, group start, group end) of its member groups' files
+    island_files: dict[tuple[int, int], list[tuple[str, int, int]]] = field(
+        default_factory=dict
+    )
+
+
+def _triage(rows, rng: Range, kinds: tuple[str, ...], live_hash, fix_clean: bool) -> _Triage:
+    """Steps 1-6 over the inventory rows; ``live_hash(height)`` is the live
+    chain's block hash (or None when unknown)."""
+    from ..core.env import env_int
+
+    cap = env_int(VERIFY_DRIVER_ROWS_ENV, DEFAULT_VERIFY_DRIVER_ROWS)
+    scoped = [r for r in rows if r[3] >= rng.start and r[2] <= rng.end]
+    if len(scoped) > cap:
+        raise RuntimeError(
+            f"verify driver inventory for the scope exceeds {cap} rows — verify "
+            "is designed to run per-chunk; narrow the scope (--range-chunk) "
+            f"or raise ${VERIFY_DRIVER_ROWS_ENV}"
+        )
+    groups = group_files(scoped)
+    out = _Triage(groups_total=len(groups))
+    pruned: list[tuple[tuple, str, list[str]]] = []  # (key, reason, files)
+
+    def every_path(files: dict[str, list[str]]) -> list[str]:
+        return [p for paths in files.values() for p in paths]
+
+    # 2. duplicates delete ONLY the files of the duplicated kind(s) (reference
+    # RangeGroupError::Duplicate, verify.rs:434-457) — an innocent txes file
+    # survives when only the blocks kind is doubled
+    alive: dict[tuple, dict[str, list[str]]] = {}
+    for key, files in groups.items():
+        dup = [p for k in kinds if len(files.get(k, ())) > 1 for p in files[k]]
+        if dup:
+            pruned.append((key, "duplicate", dup))
+        else:
+            alive[key] = files
+
+    # 3. fork resolution (J4): a height with several single-block variants
+    # keeps the one matching the live chain
+    variants: dict[int, list[tuple]] = {}
+    for key in alive:
+        if key[0] == key[1]:
+            variants.setdefault(key[0], []).append(key)
+    for height, keys in variants.items():
+        if len(keys) < 2:
+            continue
+        live = live_hash(height)
+        for key in keys:
+            if key[2] and live is not None and key[2] != live:
+                pruned.append((key, "fork_loser", every_path(alive.pop(key))))
+        # only blocks files carry the hash in their name: the height's
+        # hashless files of other kinds belong to its surviving hash group
+        hashed = [k for k in keys if k[2] and k in alive]
+        bare = (height, height, "")
+        if len(hashed) == 1 and bare in alive and alive[bare].keys().isdisjoint(alive[hashed[0]]):
+            alive[hashed[0]].update(alive.pop(bare))
+            out.groups_total -= 1
+
+    # 4. overlapping ranges → keep the largest covering (W3)
+    keep = largest_covering(alive)
+    for key in alive:
+        if key not in keep:
+            pruned.append((key, "overlap_loser", every_path(alive[key])))
+
+    # 5. completeness (A4)
+    survivors = {}
+    for key in sorted(keep):
+        if all(k in alive[key] for k in kinds):
+            survivors[key] = alive[key]
+        else:
+            pruned.append((key, "incomplete", every_path(alive[key])))
+
+    for (start, end, _h), reason, paths in pruned:
+        if reason != "incomplete" or fix_clean:
+            out.to_delete.update(paths)
+        out.failed_keys.add((start, end))
+        out.failures.append({"start": start, "end": end, "reason": reason})
+
+    # 6. islands (W4): each surviving file is read tagged with its island
+    out.reads = {k: [] for k in kinds}
+    islands = small_islands(((s, e) for s, e, _h in survivors), SMALL_GROUP_BLOCKS)
+    island_of = {m: isl for isl, members in islands for m in members}
+    for (start, end, _h), files in survivors.items():
+        isl = island_of[(start, end)]
+        members = out.island_files.setdefault((isl.start, isl.end), [])
+        for kind, paths in files.items():
+            members.extend((p, start, end) for p in paths)
+            if kind in out.reads:
+                out.reads[kind].extend((p, isl.start, isl.end) for p in paths)
+    return out
+
+
+def _read_kind(spark, base: str, files: list[tuple[str, int, int]] | None, kind: str):
+    """Lazy read of one kind's files, every row carrying its file's island
+    as ``g_start``/``g_end``; None when there is nothing to read."""
+    from pyspark.sql import types as T
+
+    from ..sources.avro_io import read_archive_data
+
+    if not files:
+        return None
+    return read_archive_data(
+        spark,
+        [(os.path.join(base, p), s, e) for p, s, e in files],
+        kind,
+        file_cols=[T.StructField(c, T.LongType(), False) for c in ISLAND],
+    )
+
+
+def _content_failures(spark, provider, base: str, reads, kinds: tuple[str, ...]) -> list[dict]:
+    """Step 7: one fused Spark query and one collect of one stats row per
+    island; the verdicts are drawn on the driver.
+
+    Every file is decoded once. Each block row becomes a tagged union row
+    (``tag`` -1) plus one row per txid its JSON lists (``tag`` 0, expected);
+    the files of the i-th checked txid kind add their rows with ``tag`` i.
+    One exchange hashed on (island, is_block, txid) feeds both the height
+    window of the linkage check — block rows carry a null txid, so an
+    island's blocks meet in one window partition — and the per-(island,
+    txid) aggregate, so the txid set work spreads over the shuffle
+    partitions rather than one task per island. A second exchange, of
+    partial aggregates, gives one row per island."""
+    bdf = _read_kind(spark, base, reads.get("blocks"), "blocks")
+    if bdf is None:
+        return []
+    actual, checked = [], []
+    for kind, payload in TX_PAYLOADS.items():
+        tdf = _read_kind(spark, base, reads.get(kind), kind)
+        if tdf is None:
+            continue
+        checked.append(kind)
+        bad = None
+        for c in payload:
+            bad = _payload_invalid(c) if bad is None else (bad | _payload_invalid(c))
+        actual.append(
+            tdf.select(
+                *ISLAND,
+                F.lit(False).alias("is_block"),
+                F.lit(len(checked)).alias("tag"),
+                "txid",
+                bad.alias("bad"),
+            )
+        )
+
+    # slot 0 is the block itself, slots 1.. the txids its JSON lists; the
+    # tx-list key is per chain — ETH "transactions", BTC "tx" (P4)
+    slots = F.array(F.lit(None).cast("string"))
+    if checked:
+        tx_field = getattr(provider, "tx_list_field", "transactions")
+        listed = F.from_json(F.col("json").cast("string"), provider.block_json_schema)[tx_field]
+        slots = F.concat(slots, F.coalesce(listed, F.array().cast("array<string>")))
+    block = F.col("pos") == 0
+    rows = (
+        bdf.select(
+            *ISLAND,
+            "height",
+            "blockId",
+            "parentId",
+            _payload_invalid("json").alias("bad_json"),
+            F.posexplode(slots).alias("pos", "txid"),
+        )
+        .filter(block | F.col("txid").isNotNull())
+        .select(
+            *ISLAND,
+            block.alias("is_block"),
+            F.when(block, -1).otherwise(0).alias("tag"),
+            "txid",
+            (block & F.col("bad_json")).alias("bad"),
+            *(F.when(block, F.col(c)).alias(c) for c in ("height", "blockId", "parentId")),
+        )
+    )
+    for a in actual:
+        rows = rows.unionByName(a, allowMissingColumns=True)
+
+    is_block, tag, height = F.col("is_block"), F.col("tag"), F.col("height")
+    key = [*ISLAND, "is_block", "txid"]
+    w = Window.partitionBy(*key).orderBy("height")
+    prev_id, prev_h = F.lag("blockId").over(w), F.lag("height").over(w)
+    linked = (
+        rows.withColumn("broken", is_block & prev_id.isNotNull() & (F.col("parentId") != prev_id))
+        .withColumn(
+            "new_height",
+            is_block & height.isNotNull() & (prev_h.isNull() | (height != prev_h)),
+        )
+    )
+    n = range(1, len(checked) + 1)
+    per_txid = linked.groupBy(*key).agg(
+        F.count_if(is_block).alias("n_rows"),
+        F.count_if("new_height").alias("n_heights"),
+        F.count_if("broken").alias("broken_links"),
+        F.count_if(is_block & F.col("bad")).alias("bad_json"),
+        F.max(F.when(is_block, F.struct("height", "blockId"))).alias("top"),
+        F.count_if(tag == 0).alias("n_exp"),
+        *(F.count_if(tag == i).alias(f"n_{i}") for i in n),
+        *(F.count_if((tag == i) & F.col("bad")).alias(f"bad_{i}") for i in n),
+    )
+    tx, n_exp = ~is_block, F.col("n_exp")
+    aggs = [
+        *(F.sum(c).alias(c) for c in ("n_rows", "n_heights", "broken_links", "bad_json")),
+        F.max("top")["blockId"].alias("top"),
+        F.sum(n_exp).alias("n_expected"),
+    ]
+    for i, kind in zip(n, checked):
+        got = F.col(f"n_{i}")
+        aggs += [
+            F.sum(F.when(tx & (got == 0), n_exp).otherwise(0)).alias(f"{kind}_missing"),
+            F.sum(F.when(tx & (n_exp == 0), got).otherwise(0)).alias(f"{kind}_unexpected"),
+            F.count_if(tx & (got > 1)).alias(f"{kind}_dup"),
+            F.sum(f"bad_{i}").alias(f"{kind}_bad_payload"),
+        ]
+    stats = sorted(
+        per_txid.groupBy(*ISLAND).agg(*aggs).collect(), key=lambda r: (r["g_start"], r["g_end"])
+    )
+
+    failures = []
+    for r in stats:
+        if not r["n_rows"]:  # no block rows: nothing to judge
+            continue
+        s, e = r["g_start"], r["g_end"]
+        live = provider.block_hash(e)  # J5 head-hash confirmation
+        ok = (
+            r["n_rows"] == r["n_heights"] == e - s + 1  # A5 no dup heights, A6 count
+            and r["broken_links"] == 0  # W1
+            and r["bad_json"] == 0  # P5
+            and (r["top"] is None or live is None or r["top"] == live)  # J5
+        )
+        if not ok:
+            failures.append(
+                {
+                    "start": s,
+                    "end": e,
+                    "reason": "blocks_content",
+                    "broken_links": r["broken_links"],
+                    "bad_json": r["bad_json"],
+                }
+            )
+    for kind in checked:
+        for r in stats:
+            # only islands whose blocks list transactions are judged
+            if not r["n_expected"]:
+                continue
+            counts = [r[f"{kind}_{c}"] for c in ("missing", "unexpected", "dup", "bad_payload")]
+            if any(counts):
+                f = {"start": r["g_start"], "end": r["g_end"], "reason": TX_REASONS[kind]}
+                if kind == "transactions":
+                    f.update(n_missing=counts[0], n_unexpected=counts[1])
+                failures.append(f)
+    return failures
+
+
 def verify(
     spark: SparkSession,
     provider,
@@ -210,309 +467,21 @@ def verify(
     base = os.path.join(root, blockchain.lower())
     kinds = tuple(k.value for k in tables)
     report = VerifyReport(scope=rng, dry_run=dry_run)
-    to_delete: set[str] = set()
 
-    inv_all = inventory_df(spark, root, blockchain)
-    # P2: files whose range intersects the scope. The fork-hash qualifier is
-    # normalized to '' so (start, end, hash) joins are null-safe.
-    inv = (
-        inv_all.filter((F.col("end") >= rng.start) & (F.col("start") <= rng.end))
-        .withColumn("hash", F.coalesce(F.col("hash"), F.lit("")))
-        .cache()
-    )
+    tri = _triage(inventory_rows(root, blockchain), rng, kinds, provider.block_hash, fix_clean)
+    report.groups_total = tri.groups_total
+    report.failures = tri.failures
+    to_delete, failed_keys = tri.to_delete, tri.failed_keys
 
-    groups = group_ranges(inv, kinds=kinds).cache()
-    report.groups_total = groups.count()
+    content = _content_failures(spark, provider, base, tri.reads, kinds)
+    report.failures.extend(content)
+    # 8. failing islands → delete all their member groups' files
+    for isl in {(f["start"], f["end"]) for f in content}:
+        for path, start, end in tri.island_files[isl]:
+            to_delete.add(path)
+            failed_keys.add((start, end))
 
-    # steps 2-5 build ONE lazy prune DAG — precedence (dup → fork → overlap →
-    # incomplete) via chained anti-joins, all materialized with two collects
-    # instead of a job per step (metadata-phase latency matters when verify
-    # runs per-chunk at fleet scale)
-    from ..operators.inventory import dedup_largest_covering
-
-    KEY = ["start", "end", "hash"]
-
-    def labeled(df: DataFrame, reason: str) -> DataFrame:
-        return df.select(*KEY).withColumn("reason", F.lit(reason))
-
-    # 2. duplicate same-kind files for one (range, hash) → delete every copy
-    dup_cond = None
-    for k in kinds:
-        c = F.col(f"n_{k}") > 1
-        dup_cond = c if dup_cond is None else (dup_cond | c)
-    dup_keys = labeled(groups.filter(dup_cond), "duplicate")
-    # duplicate groups delete ONLY the files of the kind(s) that are actually
-    # duplicated (reference RangeGroupError::Duplicate, verify.rs:434-457) —
-    # an innocent txes file survives when only the blocks kind is doubled
-    dup_kind_parts = [
-        groups.filter(F.col(f"n_{k}") > 1).select(*KEY).withColumn("kind", F.lit(k))
-        for k in kinds
-    ]
-    dup_kind_keys = dup_kind_parts[0]
-    for p in dup_kind_parts[1:]:
-        dup_kind_keys = dup_kind_keys.unionByName(p)
-    g_after_dup = groups.join(dup_keys.select(*KEY), KEY, "left_anti")
-
-    # 3. fork resolution (J4): single-height groups with >1 hash variant.
-    # The forked-height list must be driver-side (live-chain lookups) — this
-    # is the one unavoidable early job, and it's tiny.
-    singles = g_after_dup.filter(F.col("start") == F.col("end"))
-    forked_heights = (
-        singles.groupBy("start").agg(F.countDistinct("hash").alias("n")).filter("n > 1")
-    )
-    fork_list = [r["start"] for r in _bounded_collect(forked_heights, "forked heights")]
-    if fork_list:
-        lookup = spark.createDataFrame(
-            [(h, provider.block_hash(h)) for h in fork_list], "start long, live_hash string"
-        )
-        fork_losers = labeled(
-            singles.join(F.broadcast(lookup), "start").filter(
-                (F.col("hash") != "") & (F.col("hash") != F.col("live_hash"))
-            ),
-            "fork_loser",
-        )
-    else:
-        fork_losers = labeled(g_after_dup.limit(0), "fork_loser")
-    g_after_fork = g_after_dup.join(fork_losers.select(*KEY), KEY, "left_anti")
-
-    # 4. overlapping ranges → keep the largest covering (W3)
-    marked = dedup_largest_covering(g_after_fork)
-    overlap_losers = labeled(marked.filter(~F.col("keep")), "overlap_loser")
-    g_after_overlap = marked.filter(F.col("keep")).drop("keep")
-
-    # 5. completeness (A4)
-    inc_cond = None
-    for k in kinds:
-        c = F.col(f"n_{k}") == 0
-        inc_cond = c if inc_cond is None else (inc_cond | c)
-    inc_keys = labeled(g_after_overlap.filter(inc_cond), "incomplete")
-    groups = g_after_overlap.join(inc_keys.select(*KEY), KEY, "left_anti")
-
-    dup_files = (
-        inv.join(dup_kind_keys, [*KEY, "kind"], "inner")
-        .select("path", *KEY, F.lit("duplicate").alias("reason"))
-    )
-
-    pruned = fork_losers.unionByName(overlap_losers).unionByName(inc_keys)
-    pruned_files = inv.join(pruned, KEY, "inner").select("path", *KEY, "reason").unionByName(
-        dup_files
-    )
-    seen_groups: set = set()
-    failed_group_keys: set[tuple[int, int]] = set()
-    for r in _bounded_collect(pruned_files, "pruned-file list"):
-        destructive = r["reason"] != "incomplete" or fix_clean
-        if destructive:
-            to_delete.add(r["path"])
-        failed_group_keys.add((r["start"], r["end"]))
-        gk = (r["start"], r["end"], r["hash"], r["reason"])
-        if gk not in seen_groups:
-            seen_groups.add(gk)
-            report.failures.append(
-                {"start": r["start"], "end": r["end"], "reason": r["reason"]}
-            )
-
-    # hash participates in the key: a pruned fork twin at the same height must
-    # not leak its file into the surviving group's content check
-    surviving_inv = inv.join(
-        groups.select("start", "end", "hash"), ["start", "end", "hash"], "left_semi"
-    ).cache()
-
-    # W4 (verify.rs:237-267): adjacent groups of ≤10 blocks are verified as
-    # ONE island unit — the parent-hash chain check then spans file
-    # boundaries (a break between two 10-block files is invisible to
-    # per-group windows), and per-group job overhead collapses.
-    from ..operators.inventory import merge_small_ranges
-
-    memb = (
-        merge_small_ranges(groups.select("start", "end").distinct(), threshold=10)
-        .select("island_start", "island_end", F.explode("members").alias("m"))
-        .select(
-            "island_start",
-            "island_end",
-            F.col("m.start").alias("m_start"),
-            F.col("m.end").alias("m_end"),
-        )
-    )
-
-    def attach_islands(df: DataFrame | None) -> DataFrame | None:
-        if df is None:
-            return None
-        return (
-            df.join(
-                F.broadcast(memb),
-                (df["g_start"] == memb["m_start"]) & (df["g_end"] == memb["m_end"]),
-                "left",
-            )
-            .withColumn("g_start", F.coalesce("island_start", "g_start"))
-            .withColumn("g_end", F.coalesce("island_end", "g_end"))
-            .drop("island_start", "island_end", "m_start", "m_end")
-        )
-
-    # 6. content verification
-    bad_groups: DataFrame | None = None
-    bdf = (
-        attach_islands(_read_kind(spark, base, surviving_inv, "blocks"))
-        if "blocks" in kinds
-        else None
-    )
-    expected = None
-    if bdf is not None:
-        # several aggregate branches (stats, expected txids, payload checks)
-        # consume the same read+group join — cache it once
-        bdf = bdf.cache()
-        w = Window.partitionBy("g_start", "g_end").orderBy("height")
-        linked = bdf.withColumn("prev_id", F.lag("blockId").over(w)).withColumn(
-            "broken",
-            F.when(
-                F.col("prev_id").isNotNull() & (F.col("parentId") != F.col("prev_id")), 1
-            ).otherwise(0),
-        )
-        # J5 head-hash confirmation against the live chain
-        ends = [
-            r["g_end"]
-            for r in _bounded_collect(
-                bdf.select("g_end").distinct(), "group-end list"
-            )
-            if r["g_end"] is not None
-        ]
-        head_lookup = spark.createDataFrame(
-            [(h, provider.block_hash(h)) for h in ends], "g_end long, live_hash string"
-        )
-        blocks_stat = (
-            linked.groupBy("g_start", "g_end")
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.countDistinct("height").alias("n_heights"),
-                F.sum("broken").alias("broken_links"),
-                F.sum(F.when(_payload_invalid("json"), 1).otherwise(0)).alias("bad_json"),
-                F.max(F.struct("height", "blockId")).alias("top"),
-            )
-            .join(F.broadcast(head_lookup), "g_end", "left")
-            .withColumn(
-                "blocks_ok",
-                (F.col("n_rows") == F.col("n_heights"))  # A5 no dup heights
-                & (F.col("n_heights") == F.col("g_end") - F.col("g_start") + 1)  # A6
-                & (F.col("broken_links") == 0)  # W1
-                & (F.col("bad_json") == 0)  # P5
-                & (F.col("top.blockId") == F.col("live_hash")),  # J5
-            )
-        )
-        bad_groups = blocks_stat.filter(~F.col("blocks_ok"))
-        # expected txids from the blocks' own JSON payloads (P4); the tx-list
-        # key is per-chain — ETH "transactions", BTC "tx"
-        tx_field = getattr(provider, "tx_list_field", "transactions")
-        expected = (
-            bdf.select(
-                "g_start",
-                "g_end",
-                F.explode_outer(
-                    F.from_json(F.col("json").cast("string"), provider.block_json_schema)[
-                        tx_field
-                    ]
-                ).alias("txid"),
-            )
-            .filter(F.col("txid").isNotNull())
-            .cache()
-        )
-
-    def tx_check(kind: str, payload_cols: list[str]) -> DataFrame | None:
-        tdf = attach_islands(_read_kind(spark, base, surviving_inv, kind))
-        if tdf is None or expected is None:
-            return None
-        # four aggregate branches below share this read — cache it
-        actual = tdf.select("g_start", "g_end", "txid", *payload_cols).cache()
-        missing = (
-            expected.join(actual, ["g_start", "g_end", "txid"], "left_anti")
-            .groupBy("g_start", "g_end")
-            .agg(F.count("*").alias("n_missing"))
-        )
-        unexpected = (
-            actual.join(expected, ["g_start", "g_end", "txid"], "left_anti")
-            .groupBy("g_start", "g_end")
-            .agg(F.count("*").alias("n_unexpected"))
-        )
-        bad_payload_cond = None
-        for c in payload_cols:
-            cc = _payload_invalid(c)
-            bad_payload_cond = cc if bad_payload_cond is None else (bad_payload_cond | cc)
-        dups = (
-            actual.groupBy("g_start", "g_end", "txid")
-            .agg(F.count("*").alias("c"))
-            .filter("c > 1")
-            .groupBy("g_start", "g_end")
-            .agg(F.count("*").alias("n_dup"))
-        )
-        payload = (
-            actual.groupBy("g_start", "g_end")
-            .agg(F.sum(F.when(bad_payload_cond, 1).otherwise(0)).alias("n_bad_payload"))
-        )
-        stat = (
-            expected.select("g_start", "g_end")
-            .distinct()
-            .join(missing, ["g_start", "g_end"], "left")
-            .join(unexpected, ["g_start", "g_end"], "left")
-            .join(dups, ["g_start", "g_end"], "left")
-            .join(payload, ["g_start", "g_end"], "left")
-            .fillna(0, ["n_missing", "n_unexpected", "n_dup", "n_bad_payload"])
-        )
-        return stat.filter(
-            (F.col("n_missing") > 0)
-            | (F.col("n_unexpected") > 0)
-            | (F.col("n_dup") > 0)
-            | (F.col("n_bad_payload") > 0)
-        )
-
-    failing_keys: list[tuple[int, int]] = []
-    if bad_groups is not None:
-        for r in _bounded_collect(bad_groups, "failing block groups"):
-            failing_keys.append((r["g_start"], r["g_end"]))
-            report.failures.append(
-                {
-                    "start": r["g_start"],
-                    "end": r["g_end"],
-                    "reason": "blocks_content",
-                    "broken_links": r["broken_links"],
-                    "bad_json": r["bad_json"],
-                }
-            )
-    if "transactions" in kinds:
-        bad_tx = tx_check("transactions", ["json", "raw"])
-        if bad_tx is not None:
-            for r in _bounded_collect(bad_tx, "failing tx groups"):
-                failing_keys.append((r["g_start"], r["g_end"]))
-                report.failures.append(
-                    {
-                        "start": r["g_start"],
-                        "end": r["g_end"],
-                        "reason": "txes_content",
-                        "n_missing": r["n_missing"],
-                        "n_unexpected": r["n_unexpected"],
-                    }
-                )
-    if "traces" in kinds:
-        bad_tr = tx_check("traces", ["traceJson", "stateDiffJson"])
-        if bad_tr is not None:
-            for r in _bounded_collect(bad_tr, "failing trace groups"):
-                failing_keys.append((r["g_start"], r["g_end"]))
-                report.failures.append(
-                    {"start": r["g_start"], "end": r["g_end"], "reason": "traces_content"}
-                )
-
-    # 7. failing islands → delete all their member groups' files
-    if failing_keys:
-        keys_df = spark.createDataFrame(sorted(set(failing_keys)), "i_start long, i_end long")
-        fail_members = memb.join(
-            keys_df,
-            (memb["island_start"] == F.col("i_start"))
-            & (memb["island_end"] == F.col("i_end")),
-            "left_semi",
-        ).select(F.col("m_start").alias("start"), F.col("m_end").alias("end"))
-        fail_files = surviving_inv.join(fail_members, ["start", "end"], "left_semi")
-        for r in _bounded_collect(fail_files, "failing-island file list"):
-            to_delete.add(r["path"])
-            failed_group_keys.add((r["start"], r["end"]))
-
-    report.groups_ok = report.groups_total - len(failed_group_keys)
+    report.groups_ok = report.groups_total - len(failed_keys)
     if snapshot and not dry_run:
         # fork MERGE (T5 transactional upgrade): every pruned file — fork
         # losers, duplicates, overlap losers — leaves the archive in ONE
@@ -543,10 +512,4 @@ def verify(
     else:
         res = delete_files(base, sorted(to_delete), dry_run=dry_run)
         report.deleted = res.deleted
-    inv.unpersist()
-    surviving_inv.unpersist()
-    if bdf is not None:
-        bdf.unpersist()
-    if expected is not None:
-        expected.unpersist()
     return report

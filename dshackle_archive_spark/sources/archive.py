@@ -244,11 +244,14 @@ def list_archive_files_pyarrow(root: str) -> list[str]:
     return sorted(out)
 
 
-def inventory_df(spark: SparkSession, root: str, blockchain: str | None = None) -> DataFrame:
-    """File-inventory DataFrame: parse (kind, start, end, hash) from paths.
+def inventory_rows(root: str, blockchain: str | None = None) -> list[tuple]:
+    """File inventory as plain rows: ``(path, kind, start, end, hash)`` parsed
+    from the listed paths, one per archive file.
 
     Non-matching (foreign) files are skipped, as in ``filenames.rs:29-49``.
     URI roots (``s3://…``) list through pyarrow; posix roots walk locally.
+    The rows are metadata-scale (one per ≤1000-block file), so verify and
+    fix run their interval algebra on them directly on the driver.
     """
     if "://" in root:
         # a URI query string (endpoint_override etc.) stays after the path
@@ -263,7 +266,12 @@ def inventory_df(spark: SparkSession, root: str, blockchain: str | None = None) 
         fi = parse_filename(rel)
         if fi is not None:
             rows.append((rel, fi.kind.value, fi.range.start, fi.range.end, fi.hash))
-    return spark.createDataFrame(rows, INVENTORY_SCHEMA)
+    return rows
+
+
+def inventory_df(spark: SparkSession, root: str, blockchain: str | None = None) -> DataFrame:
+    """File-inventory DataFrame over ``inventory_rows``."""
+    return spark.createDataFrame(inventory_rows(root, blockchain), INVENTORY_SCHEMA)
 
 
 def delete_files(root: str, rel_paths: list[str], dry_run: bool = False) -> DeleteResult:

@@ -12,8 +12,8 @@ prefixed bytes/strings, union index prefix, block-coded arrays/maps.
 
 Scale: decoding is Python-side and intended for the compat path only (the
 native analytic format is Parquet). ``read_avro_df`` distributes decoding by
-file — one task per file via ``mapInPandas`` over the path list — so a
-million-file archive still decodes cluster-wide.
+file — tasks decode whole files via ``mapInPandas`` over the path list — so
+a million-file archive still decodes cluster-wide.
 
 Reference parity: reads the reference's own mainnet fixtures
 (``/root/reference/testdata/fullAvroFiles/``, golden counts 1 block /
@@ -372,14 +372,30 @@ _RECORD_NAMES = {"blocks": "Block", "transactions": "Transaction", "traces": "Tr
 
 
 def read_avro_df(
-    spark, paths: list[str], spark_schema, with_path: bool = False, expected_record: str | None = None
+    spark,
+    paths: list,
+    spark_schema,
+    with_path: bool = False,
+    expected_record: str | None = None,
+    file_cols=(),
 ):
-    """Distributed Avro read: one task per file decodes via ``mapInPandas``.
+    """Distributed Avro read: tasks decode whole files via ``mapInPandas``.
 
     Timestamp-millis longs are converted according to the target Spark
     schema; unknown writer fields are dropped, missing ones null-filled.
     ``with_path=True`` appends a ``_path`` column (the Avro analog of
-    ``input_file_name()``)."""
+    ``input_file_name()``). ``file_cols`` (``StructField``s) are per-file
+    columns: each item of ``paths`` is then a tuple ``(path, *values)`` and
+    every record of that file carries the values in those columns.
+
+    The path rows become a local table (built from a pandas frame, so it
+    travels to the JVM as Arrow with no Python worker pass of its own),
+    which Spark spreads over at most the context's default parallelism
+    partitions; a read is one Spark job with no shuffle in front of the
+    decode. Few partitions on purpose: a task costs tens of milliseconds to
+    schedule, far more than a ≤1000-block file takes to decode (on a 4-core
+    host, 10 files of 100 blocks decode in 20 ms of Python but read in
+    1.5 s as 10 tasks and 0.7 s as 4)."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -387,52 +403,83 @@ def read_avro_df(
     from ..session import ship_package
 
     ship_package(spark)
-    out_schema = spark_schema
+    file_cols = list(file_cols)
+    extra = [f.name for f in file_cols]
+    out_fields = list(spark_schema.fields) + file_cols
     if with_path:
-        out_schema = T.StructType(
-            list(spark_schema.fields) + [T.StructField("_path", T.StringType(), False)]
-        )
+        out_fields.append(T.StructField("_path", T.StringType(), False))
     names = [f.name for f in spark_schema.fields]
     ts_cols = {
         f.name for f in spark_schema.fields if f.dataType.typeName().startswith("timestamp")
     }
-    cols = names + (["_path"] if with_path else [])
 
     def gen(batches):
         for pdf in batches:
-            for path in pdf["path"].tolist():
+            for path, *values in zip(pdf["path"].tolist(), *(pdf[c].tolist() for c in extra)):
                 rows = []
                 for rec in read_avro_records(path, expected_record=expected_record):
                     row = {n: rec.get(n) for n in names}
                     for c in ts_cols:
                         if row[c] is not None:
                             row[c] = pd.Timestamp(int(row[c]), unit="ms")
-                    if with_path:
-                        row["_path"] = path
                     rows.append(row)
-                yield pd.DataFrame(rows, columns=cols)
+                out = pd.DataFrame(rows, columns=names)
+                for c, v in zip(extra, values):
+                    out[c] = v
+                if with_path:
+                    out["_path"] = path
+                yield out
 
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        min(len(paths), 256) or 1
+    rows = [(p,) if isinstance(p, str) else tuple(p) for p in paths]
+    in_schema = T.StructType(
+        [T.StructField("path", T.StringType(), False)]
+        + [T.StructField(f.name, f.dataType, True) for f in file_cols]
     )
-    return pdf.mapInPandas(gen, schema=out_schema)
+    table = pd.DataFrame(rows, columns=in_schema.names)
+    return spark.createDataFrame(table, in_schema).mapInPandas(
+        gen, schema=T.StructType(out_fields)
+    )
 
 
-def read_archive_data(spark, full_paths: list[str], kind: str):
+def read_archive_data(spark, full_paths: list, kind: str, file_cols=()):
     """Format-dispatching archive read: parquet natively, ``.avro`` through
     the container codec — both with a ``_path`` column, unioned into one
-    DataFrame so verify/compact are format-agnostic."""
+    DataFrame so verify/compact are format-agnostic.
+
+    ``file_cols`` works as in ``read_avro_df``: items of ``full_paths`` are
+    then ``(path, *values)`` tuples. Parquet rows get the values through a
+    broadcast join on the file's base name (unique within a kind, since it
+    encodes range and hash); the broadcast side is a local table built from
+    a pandas frame, so it needs no Python worker pass."""
+    import pandas as pd
     from pyspark.sql import functions as F
 
     from ..schemas import TABLE_SCHEMAS
 
-    pq = [p for p in full_paths if p.endswith(".parquet")]
-    av = [p for p in full_paths if p.endswith(".avro")]
+    items = [(p,) if isinstance(p, str) else tuple(p) for p in full_paths]
+    pq = [t for t in items if t[0].endswith(".parquet")]
+    av = [t for t in items if t[0].endswith(".avro")]
     parts = []
     if pq:
-        parts.append(
-            spark.read.parquet(*pq).withColumn("_path", F.input_file_name())
-        )
+        df = spark.read.parquet(*(t[0] for t in pq)).withColumn("_path", F.input_file_name())
+        if file_cols:
+            from pyspark.sql import types as T
+
+            key_schema = T.StructType(
+                [T.StructField("_base", T.StringType(), False), *file_cols]
+            )
+            keys = spark.createDataFrame(
+                pd.DataFrame(
+                    [(os.path.basename(t[0]), *t[1:]) for t in pq], columns=key_schema.names
+                ),
+                key_schema,
+            )
+            df = (
+                df.withColumn("_base", F.element_at(F.split(F.col("_path"), "/"), -1))
+                .join(F.broadcast(keys), "_base", "left")
+                .drop("_base")
+            )
+        parts.append(df)
     if av:
         parts.append(
             read_avro_df(
@@ -441,6 +488,7 @@ def read_archive_data(spark, full_paths: list[str], kind: str):
                 TABLE_SCHEMAS[kind],
                 with_path=True,
                 expected_record=_RECORD_NAMES.get(kind),
+                file_cols=file_cols,
             )
         )
     if not parts:

@@ -367,7 +367,11 @@ def write_piece_files(
     base = _join_path(root, blockchain.lower())
     spark = df.sparkSession
     norm = [(p.start, p.end) if isinstance(p, Range) else (int(p[0]), int(p[1])) for p in pieces]
-    pieces_df = spark.createDataFrame(norm, "p_start long, p_end long")
+    # a pandas frame reaches the JVM as Arrow, a local table: broadcasting
+    # it runs no Python worker pass, and kinds with the same pieces share it
+    pieces_df = spark.createDataFrame(
+        pd.DataFrame(norm, columns=["p_start", "p_end"]), "p_start long, p_end long"
+    )
     key = F.concat_ws("_", F.col("p_start"), F.col("p_end"))
     tagged = (
         df.join(

@@ -19,11 +19,12 @@ from dshackle_archive_spark.sources.avro_io import (
 
 FIXTURES = "/root/reference/testdata/fullAvroFiles"
 
-pytestmark = pytest.mark.skipif(
+needs_fixtures = pytest.mark.skipif(
     not os.path.isdir(FIXTURES), reason="reference fixtures not available"
 )
 
 
+@needs_fixtures
 def test_golden_block_count():
     recs = list(read_avro_records(f"{FIXTURES}/000723743.block.avro"))
     assert len(recs) == 1
@@ -35,6 +36,7 @@ def test_golden_block_count():
     assert parsed["height"] == 723743
 
 
+@needs_fixtures
 def test_golden_txes_cross_check():
     # the block's embedded JSON tx list must exactly match the txes file —
     # the reference's J1 verify invariant, checked on real mainnet data
@@ -45,6 +47,7 @@ def test_golden_txes_cross_check():
     assert {r["txid"] for r in recs} == set(expected)
 
 
+@needs_fixtures
 def test_golden_ethereum_block():
     recs = list(read_avro_records(f"{FIXTURES}/ethereum/015437941.block.avro"))
     assert len(recs) == 1 and recs[0]["height"] == 15437941
@@ -56,12 +59,47 @@ def test_golden_ethereum_block():
     }
 
 
+@needs_fixtures
 def test_range_file_reads():
     path = f"{FIXTURES}/btc/000700000/range-000723745_000723749.blocks.avro"
     recs = list(read_avro_records(path))
     assert [r["height"] for r in recs] == [723745, 723746, 723747, 723748, 723749]
 
 
+def test_spark_df_read_is_one_job(spark, tmp_path):
+    """N files decode in ONE Spark job (no shuffle ahead of the decode), the
+    path rows reach the JVM as a local table (a Python-side RDD would add a
+    Python worker pass to every read task), and per-file columns ride along
+    with each file's records."""
+    from pyspark.sql import types as T
+
+    schema = {"type": "record", "name": "S", "fields": [{"name": "v", "type": "long"}]}
+    files = []
+    for i in range(6):
+        p = str(tmp_path / f"f{i}.avro")
+        write_avro_records(p, schema, [{"v": i * 10 + j} for j in range(3)])
+        files.append((p, i))
+    df = read_avro_df(
+        spark,
+        files,
+        T.StructType([T.StructField("v", T.LongType())]),
+        file_cols=[T.StructField("file_no", T.LongType())],
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    sc = spark.sparkContext
+    sc.setJobGroup("avro-read-jobs", "count avro read jobs")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("avro-read-jobs")) == 1
+    assert sorted((r["file_no"], r["v"]) for r in rows) == [
+        (i, i * 10 + j) for i in range(6) for j in range(3)
+    ]
+
+
+@needs_fixtures
 def test_spark_df_read(spark):
     df = read_avro_df(
         spark,
@@ -103,6 +141,7 @@ def test_roundtrip_null_codec(tmp_path):
     assert [r["v"] for r in read_avro_records(p)] == list(range(10))
 
 
+@needs_fixtures
 def test_transactions_schema_fields():
     # every column of our TRANSACTIONS_SCHEMA is recoverable from real files
     rec = next(iter(read_avro_records(f"{FIXTURES}/000723744.txes.avro")))
@@ -231,6 +270,7 @@ def test_roundtrip_property_random_records():
             assert list(read_avro_records(p)) == records, f"trial {trial} codec {codec}"
 
 
+@needs_fixtures
 def test_schema_kind_check_on_read():
     """Opening a txes file as blocks fails loudly (reference's schema check)."""
     with pytest.raises(ValueError, match="schema mismatch"):
@@ -242,6 +282,7 @@ def test_schema_kind_check_on_read():
     assert len(recs) == 423
 
 
+@needs_fixtures
 def test_chain_json_schemas_parse_real_payloads(spark):
     """The per-chain schema-on-read StructTypes recover the fields the engine
     needs (P4) from REAL mainnet block JSON."""

@@ -569,3 +569,103 @@ def test_verify_driver_inventory_bound_is_enforced(spark, tmp_path, monkeypatch)
     monkeypatch.delenv(VERIFY_DRIVER_ROWS_ENV)
     rep = verify(spark, CHAIN, str(tmp_path), Range(100, 499), tables=BT)
     assert rep.failures == [] and rep.groups_ok == 4
+
+
+def test_verify_latest_stream_archive_keeps_every_file(spark, tmp_path):
+    """A latest-mode stream archive names only its blocks files with the
+    block hash; a height's hashless txes file belongs to that hash's group.
+    Verify used to split them, mark every blocks file an overlap loser,
+    delete it, and report every txes group incomplete."""
+    archive_single_blocks(spark, CHAIN, str(tmp_path), Range(1_000, 1_004), tables=BT,
+                          policy=POLICY, forks=True)
+    before = tree(tmp_path)
+    assert len(before) == 10
+    rep = verify(spark, CHAIN, str(tmp_path), Range(1_000, 1_004), tables=BT)
+    assert (rep.groups_total, rep.groups_ok) == (5, 5)
+    assert rep.failures == [] and rep.deleted == []
+    assert tree(tmp_path) == before
+
+
+def _damaged_avro_archive(spark, root, groups):
+    """An Avro archive of ``groups`` 100-block groups from height 0 with one
+    of each damage: a gap (group 100..199 gone), a partial group (200..299
+    without txes), an overlapping range file (310..319 inside 300..399) and
+    a broken parent link (height 50)."""
+    from dshackle_archive_spark.sources.avro_io import (
+        read_avro_records,
+        read_avro_schema,
+        write_avro_records,
+    )
+
+    archive(spark, CHAIN, root, Range(0, groups * 100 - 1), tables=BT, chunk=100,
+            policy=POLICY, fmt="avro")
+    d = os.path.join(root, "eth", "000000000")
+
+    def name(start, end, ext):
+        return os.path.join(d, f"range-{start:09d}_{end:09d}.{ext}.avro")
+
+    for ext in ("blocks", "txes"):
+        os.remove(name(100, 199, ext))
+    os.remove(name(200, 299, "txes"))
+    for ext in ("blocks", "txes"):
+        src = name(300, 399, ext)
+        recs = [r for r in read_avro_records(src) if 310 <= r["height"] <= 319]
+        write_avro_records(name(310, 319, ext), read_avro_schema(src), recs)
+    src = name(0, 99, "blocks")
+    recs = list(read_avro_records(src))
+    recs[50]["parentId"] = "0" * 64
+    write_avro_records(src, read_avro_schema(src), recs)
+
+
+def test_verify_issues_constant_jobs_on_damaged_archive(spark, tmp_path):
+    """verify's metadata work runs on the driver and its content checks in
+    one fused query, so its Spark job count does not grow with the group
+    count (it used to issue ~105 jobs per call)."""
+    sc = spark.sparkContext
+
+    def run(groups):
+        root = str(tmp_path / f"g{groups}")
+        _damaged_avro_archive(spark, root, groups)
+        group = f"verify-jobs-{groups}"
+        sc.setJobGroup(group, "count verify jobs")
+        try:
+            rep = verify(spark, CHAIN, root, Range(0, groups * 100 - 1), tables=BT,
+                         dry_run=True)
+        finally:
+            sc.setJobGroup(None, None)
+        return rep, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    (rep4, jobs4), (rep20, jobs20) = run(4), run(20)
+    for rep, groups in ((rep4, 4), (rep20, 20)):
+        assert sorted((f["start"], f["end"], f["reason"]) for f in rep.failures) == [
+            (0, 99, "blocks_content"), (200, 299, "incomplete"), (310, 319, "overlap_loser"),
+        ]
+        assert rep.groups_total == groups and rep.groups_ok == groups - 3
+    assert jobs4 == jobs20 <= 8, f"4 groups: {jobs4} jobs, 20 groups: {jobs20} jobs"
+
+
+def test_verify_triage_attaches_hashless_files_after_fork_resolution():
+    """Driver phase, no Spark: at a forked height the stale twin loses, and
+    the height's hashless txes file joins the surviving hash group; a height
+    that also holds a hashless blocks file keeps its groups apart (the
+    overlap rule then picks one)."""
+    from dshackle_archive_spark.plans.verify_plan import _triage
+
+    live, stale = "a" * 64, "b" * 64
+    rows = [
+        (f"7.{live}.block", "blocks", 7, 7, live),
+        (f"7.{stale}.block", "blocks", 7, 7, stale),
+        ("7.txes", "transactions", 7, 7, None),
+        (f"8.{live}.block", "blocks", 8, 8, live),
+        ("8.block", "blocks", 8, 8, None),
+        ("8.txes", "transactions", 8, 8, None),
+    ]
+    tri = _triage(rows, Range(7, 8), ("blocks", "transactions"), lambda h: live, False)
+    assert tri.groups_total == 4  # 7's txes file joined its hash group
+    assert sorted((f["start"], f["reason"]) for f in tri.failures) == [
+        (7, "fork_loser"), (8, "overlap_loser"),
+    ]
+    assert tri.to_delete == {f"7.{stale}.block", f"8.{live}.block"}
+    assert tri.island_files == {
+        (7, 8): [(f"7.{live}.block", 7, 7), ("7.txes", 7, 7), ("8.block", 8, 8), ("8.txes", 8, 8)]
+    }
