@@ -1,41 +1,52 @@
 """``compact`` — merge single-block files into range files (reference
 ``src/command/compact.rs``, SURVEY §3.3 tail).
 
-Spark shape: classic small-file compaction with a completeness gate, fully
-batched — the job count is O(1) per kind, independent of how many chunks the
-scope spans (the reference loops chunk-by-chunk, ``compact.rs:48-117``, which
-is fine for its microsecond loop bodies but would serialize ~100 ms Spark job
+Two phases and one Spark job per call, however many chunks the scope spans
+(the reference loops chunk by chunk, ``compact.rs:48-117``, which is fine
+for its microsecond loop bodies but would serialize ~100 ms Spark job
 launches; a 1M-block scope is 1,000 chunks).
 
-1. aligned chunks only (C2 — compaction never builds partial range files,
-   ``compact.rs:48``)
-2. ONE grouped gate pass (``verify_files``, ``compact.rs:221-243``) computes
-   every chunk's verdict at once: requested kinds complete, group ranges
-   exactly covering the chunk, no boundary-crossing files, no duplicates,
-   not already compacted (an exact-range file for every REQUESTED kind —
-   foreign kinds don't count)
-3. rewrite: per kind, ONE job reads every passing chunk's source files and
-   writes one range file per chunk (the chunk key is the shuffle key, so
-   1,000 chunks land as 1,000 parallel tasks)
-4. reconciliation (J6/A7) for ALL chunks in one grouped job: copied heights
-   must form exactly one island equal to the chunk; txids promised by copied
-   blocks == txids copied. Failing chunks roll back their outputs.
-5. delete source files of successfully compacted chunks
+Driver phase — plain Python over the inventory rows
+(``sources.archive.inventory_rows``) with ``core.ranges``; no Spark job.
+Only aligned chunks are considered (C2 — compaction never builds partial
+range files, ``compact.rs:48``). Each chunk is skipped when (``verify_files``,
+``compact.rs:221-243``):
+
+1. every REQUESTED kind already has its exact-range file (foreign kinds
+   don't count) — already compacted
+2. a file crosses the chunk boundary
+3. a kind's files do not merge into exactly the chunk
+4. a (kind, range, hash) has more than one file — duplicates
+5. a height has more than one single-block blocks file — an unresolved
+   fork, which ``verify`` resolves against the live chain
+
+A passing chunk gets a per-kind source list; a kind already held in its
+exact-range file is kept as is (read for the reconciliation only, never
+rewritten or deleted).
+
+Spark phase — ONE ``mapInPandas`` job over a local table with one row per
+passing chunk. A task takes its chunks one at a time: it reads the chunk's
+files, reconciles them (A5/A7: the block heights are one island equal to
+the chunk, one row each; J6: txids promised by the blocks == txids copied)
+and only then writes each rewritten kind's range file (tmp+rename). A chunk
+that fails the reconciliation writes nothing and keeps its sources, so
+nothing is ever rolled back. The driver then deletes the sources of the
+compacted chunks (or swaps them out of the snapshot manifest).
 """
 
 from __future__ import annotations
 
+import json
 import os
+from collections import Counter
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
-from ..core.filenames import DataKind
-from ..core.ranges import Range
-from ..operators.intervals import merge_range_rows
-from ..sources import ref_layout
-from ..sources.archive import delete_files, inventory_df
+from ..core.filenames import DataKind, range_file_path
+from ..core.ranges import Range, merge_ranges
+from ..sources.archive import delete_files, inventory_rows
 
 
 @dataclass
@@ -50,92 +61,157 @@ class CompactResult:
     snapshot_version: int | None = None
 
 
-def _gate(
-    spark: SparkSession,
-    inv: DataFrame,
-    chunks: list[Range],
-    kinds: tuple[str, ...],
-    chunk: int,
-) -> list[dict]:
-    """All chunks' gate verdicts in one grouped pass (≈2 metadata-scale jobs).
+# kind -> (paths to read, rewrite?) for one passing chunk
+ChunkPlan = dict[str, tuple[list[str], bool]]
 
-    Returns one dict per chunk: ``c_start, c_end, has_overhang, n_exact,
-    uncovered (list of kinds), has_dup`` — the caller turns these into
-    skip/pass decisions driver-side without further jobs.
-    """
-    chunks_df = spark.createDataFrame(
-        [(c.start, c.end) for c in chunks], "c_start long, c_end long"
+
+def _verdict(files: list[tuple], c: Range, kinds: tuple[str, ...]) -> str | None:
+    """The gate's skip reason for chunk ``c`` given the inventory rows of
+    the requested kinds that intersect it, or None when it passes."""
+    contained = [r for r in files if r[2] >= c.start and r[3] <= c.end]
+    exact = {r[1] for r in contained if (r[2], r[3]) == (c.start, c.end)}
+    if len(exact) == len(kinds):
+        return "already compacted"
+    if len(contained) < len(files):
+        return "file range crosses chunk boundary"
+    uncovered = [
+        k for k in sorted(kinds)
+        if merge_ranges(Range(r[2], r[3]) for r in contained if r[1] == k) != [c]
+    ]
+    if uncovered:
+        return f"{uncovered[0]} does not exactly cover the chunk"
+    if any(n > 1 for n in Counter((r[1], r[2], r[3], r[4]) for r in contained).values()):
+        return "duplicate files in chunk"
+    singles = Counter(r[2] for r in contained if r[1] == "blocks" and r[2] == r[3])
+    if any(n > 1 for n in singles.values()):
+        return "unresolved fork"
+    return None
+
+
+def _gate(
+    rows: list[tuple], chunks: list[Range], kinds: tuple[str, ...], chunk: int
+) -> tuple[list[tuple[int, int, str]], dict[tuple[int, int], ChunkPlan]]:
+    """Every chunk's verdict from the inventory rows, on the driver.
+
+    Returns the skipped chunks with their reasons and, per passing chunk,
+    its plan: for each kind the source files to rewrite, or the exact-range
+    file that is kept as is."""
+    by_chunk: dict[int, list[tuple]] = {c.start // chunk: [] for c in chunks}
+    lo, hi = min(by_chunk), max(by_chunk)
+    for r in rows:
+        if r[1] in kinds:
+            for cid in range(max(r[2] // chunk, lo), min(r[3] // chunk, hi) + 1):
+                by_chunk[cid].append(r)
+    skipped, passing = [], {}
+    for c in chunks:
+        files = by_chunk[c.start // chunk]
+        reason = _verdict(files, c, kinds)
+        if reason is not None:
+            skipped.append((c.start, c.end, reason))
+            continue
+        plan: ChunkPlan = {}
+        for kind in kinds:
+            mine = sorted(r[0] for r in files if r[1] == kind and (r[2], r[3]) != (c.start, c.end))
+            exact = [r[0] for r in files if r[1] == kind and (r[2], r[3]) == (c.start, c.end)]
+            plan[kind] = (exact, False) if exact else (mine, True)
+        passing[(c.start, c.end)] = plan
+    return skipped, passing
+
+
+def _reconciles(data: dict, c_start: int, c_end: int, tx_field: str | None) -> bool:
+    """J6/A7 over one chunk's rows (kind -> pandas frame): the block
+    heights are exactly the chunk, one row each (A5), and with ``tx_field``
+    the txids the blocks' JSON lists equal the copied txids, as multisets."""
+    blocks = data.get("blocks")
+    if blocks is None:
+        return True
+    h = blocks["height"]
+    if not (len(h) == h.nunique() == c_end - c_start + 1
+            and h.min() == c_start and h.max() == c_end):
+        return False
+    if tx_field is None or "transactions" not in data:
+        return True
+    promised: Counter = Counter()
+    for raw in blocks["json"]:
+        try:
+            doc = json.loads(raw)
+        except (TypeError, ValueError):
+            return False
+        if not isinstance(doc, dict):
+            return False
+        listed = doc.get(tx_field) or []
+        if not isinstance(listed, list) or not all(isinstance(t, str) for t in listed):
+            return False
+        promised.update(listed)
+    return promised == Counter(data["transactions"]["txid"])
+
+
+REWRITE_SCHEMA = T.StructType(
+    [
+        T.StructField("c_start", T.LongType(), False),
+        T.StructField("c_end", T.LongType(), False),
+        T.StructField("kind", T.StringType(), False),
+        T.StructField("ok", T.BooleanType(), False),
+        T.StructField("location", T.StringType(), True),  # None: not written
+        T.StructField("n_rows", T.LongType(), False),
+        T.StructField("h_min", T.LongType(), True),
+        T.StructField("h_max", T.LongType(), True),
+    ]
+)
+
+
+def _rewrite_chunk(base: str, c_start: int, c_end: int, plan: ChunkPlan, fmt: str,
+                   compression: str, tx_field: str | None):
+    """Read, reconcile and write one chunk; one result row per kind."""
+    import pandas as pd
+
+    from ..sources.avro_io import read_archive_pdf
+    from ..sources.ref_layout import _commit, _serialize_group
+
+    data = {}
+    for kind, (paths, _write) in plan.items():
+        rows = read_archive_pdf([os.path.join(base, p) for p in paths], kind)
+        data[kind] = rows.sort_values(["height"] if kind == "blocks" else ["height", "index"])
+    ok = _reconciles(data, c_start, c_end, tx_field)
+    out = []
+    for kind, (_paths, write) in plan.items():
+        rows, location = data[kind], None
+        if ok and write:
+            dk = DataKind(kind)
+            location = os.path.join(base, range_file_path(Range(c_start, c_end), dk, fmt=fmt))
+            _commit(location, _serialize_group(dk, rows, fmt, compression))
+        n = len(rows)
+        out.append((c_start, c_end, kind, ok, location, n,
+                    int(rows["height"].min()) if n else None,
+                    int(rows["height"].max()) if n else None))
+    return pd.DataFrame(out, columns=REWRITE_SCHEMA.names)
+
+
+def _rewrite(spark: SparkSession, base: str, passing: dict[tuple[int, int], ChunkPlan],
+             fmt: str, compression: str, tx_field: str | None) -> list:
+    """The fused rewrite: one job, one result row per (chunk, kind).
+
+    The chunk table is built from a pandas frame, so it reaches the JVM as
+    an Arrow local table: no Python pass and no listing job in front of the
+    rewrite, and at most ``defaultParallelism`` tasks."""
+    import pandas as pd
+
+    from ..session import ship_package
+
+    ship_package(spark)
+    table = pd.DataFrame(
+        [(s, e, json.dumps(plan)) for (s, e), plan in sorted(passing.items())],
+        columns=["c_start", "c_end", "plan"],
     )
-    kinds_df = spark.createDataFrame([(k,) for k in kinds], "kind string")
-    # files of the REQUESTED kinds intersecting any chunk (broadcast the tiny
-    # chunk domain — J7-style range assignment, never a cartesian over data)
-    fk = (
-        inv.filter(F.col("kind").isin(list(kinds)))
-        .join(
-            F.broadcast(chunks_df),
-            (F.col("end") >= F.col("c_start")) & (F.col("start") <= F.col("c_end")),
-            "inner",
-        )
-        .withColumn(
-            "contained",
-            (F.col("start") >= F.col("c_start")) & (F.col("end") <= F.col("c_end")),
-        )
-        .withColumn(
-            "exact",
-            (F.col("start") == F.col("c_start")) & (F.col("end") == F.col("c_end")),
-        )
-    )
-    contained = fk.filter("contained")
-    # per (chunk, kind): do the contained ranges merge into exactly the chunk?
-    cover = (
-        merge_range_rows(
-            contained.select("c_start", "c_end", "kind", "start", "end"),
-            keys=["c_start", "c_end", "kind"],
-        )
-        .groupBy("c_start", "c_end", "kind")
-        .agg(
-            F.count("*").alias("n_islands"),
-            F.min("start").alias("cov_start"),
-            F.max("end").alias("cov_end"),
-        )
-    )
-    dups = (
-        contained.groupBy("c_start", "kind", "start", "end", "hash")
-        .agg(F.count("*").alias("n"))
-        .filter("n > 1")
-        .groupBy("c_start")
-        .agg(F.count("*").alias("n_dup_groups"))
-    )
-    exacts = (
-        fk.filter("exact")
-        .groupBy("c_start")
-        .agg(F.countDistinct("kind").alias("n_exact"))
-    )
-    overhang = (
-        fk.filter(~F.col("contained"))
-        .groupBy("c_start")
-        .agg(F.count("*").alias("n_overhang"))
-    )
-    dom = chunks_df.crossJoin(F.broadcast(kinds_df))
-    kind_stat = dom.join(cover, ["c_start", "c_end", "kind"], "left").withColumn(
-        "covered",
-        (F.col("n_islands") == 1)
-        & (F.col("cov_start") == F.col("c_start"))
-        & (F.col("cov_end") == F.col("c_end")),
-    )
-    chunk_stat = (
-        kind_stat.groupBy("c_start", "c_end")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.when(~F.coalesce(F.col("covered"), F.lit(False)), F.col("kind")))
-            ).alias("uncovered")
-        )
-        .join(exacts, "c_start", "left")
-        .join(overhang, "c_start", "left")
-        .join(dups, "c_start", "left")
-        .fillna(0, ["n_exact", "n_overhang", "n_dup_groups"])
-    )
-    return [r.asDict() for r in chunk_stat.orderBy("c_start").collect()]
+
+    def rewrite(batches):
+        for pdf in batches:
+            for s, e, plan in zip(pdf["c_start"], pdf["c_end"], pdf["plan"]):
+                yield _rewrite_chunk(base, int(s), int(e), json.loads(plan), fmt,
+                                     compression, tx_field)
+
+    chunks_df = spark.createDataFrame(table, "c_start long, c_end long, plan string")
+    return chunks_df.mapInPandas(rewrite, schema=REWRITE_SCHEMA).collect()
 
 
 def compact(
@@ -152,8 +228,6 @@ def compact(
     fmt: str = "parquet",
     compression: str = "zstd",
 ) -> CompactResult:
-    from ..sources.avro_io import read_archive_data
-
     base = os.path.join(root, blockchain.lower())
     kinds = tuple(k.value for k in tables)
     result = CompactResult()
@@ -161,218 +235,58 @@ def compact(
     chunks = rng.split_chunks(chunk, aligned=True)
     if not chunks:
         return result
-
-    inv_all = inventory_df(spark, root, blockchain).cache()
-    verdicts = _gate(spark, inv_all, chunks, kinds, chunk)
-
-    passing: list[tuple[int, int]] = []
-    for v in verdicts:
-        key = (v["c_start"], v["c_end"])
-        if v["n_exact"] == len(kinds):
-            # C2/task gate: one exact-range file per REQUESTED kind — a
-            # foreign kind's range file must not mask uncompacted singles
-            result.skipped_chunks.append((*key, "already compacted"))
-        elif v["n_overhang"] > 0:
-            result.skipped_chunks.append((*key, "file range crosses chunk boundary"))
-        elif v["uncovered"]:
-            result.skipped_chunks.append(
-                (*key, f"{v['uncovered'][0]} does not exactly cover the chunk")
-            )
-        elif v["n_dup_groups"] > 0:
-            result.skipped_chunks.append((*key, "duplicate files in chunk"))
-        else:
-            passing.append(key)
-
+    result.skipped_chunks, passing = _gate(inventory_rows(root, blockchain), chunks, kinds, chunk)
     if not passing or dry_run:
-        inv_all.unpersist()
         return result
 
-    passing_ids = sorted(s // chunk for s, _ in passing)
-    ids_df = spark.createDataFrame([(i,) for i in passing_ids], "cid long")
+    if snapshot:
+        from ..sources import snapshots as SNAP
+        from ..sources.archive import list_archive_files
 
-    # which (chunk, kind) already sits in its exact target file (kept as-is,
-    # never rewritten-and-deleted in place) + the source-file work list —
-    # one metadata-scale collect
-    chunks_df = spark.createDataFrame(list(passing), "c_start long, c_end long")
-    files = (
-        inv_all.filter(F.col("kind").isin(list(kinds)))
-        .join(
-            F.broadcast(chunks_df),
-            (F.col("start") >= F.col("c_start")) & (F.col("end") <= F.col("c_end")),
-            "inner",
-        )
-        .withColumn(
-            "exact",
-            (F.col("start") == F.col("c_start")) & (F.col("end") == F.col("c_end")),
-        )
-        .select("c_start", "kind", "path", "exact")
-        .collect()
-    )
-    inv_all.unpersist()
-    exact_kinds: dict[int, set] = {}
-    sources: dict[tuple[int, str], list[str]] = {}
-    for r in files:
-        if r["exact"]:
-            exact_kinds.setdefault(r["c_start"], set()).add(r["kind"])
-        else:
-            sources.setdefault((r["c_start"], r["kind"]), []).append(r["path"])
+        if SNAP.load_snapshot(base) is None:
+            # first snapshot: adopt the pre-compact listing as v1 so the
+            # merge has a base (metadata-scale walk, taken before any write)
+            SNAP.publish_snapshot(base, list_archive_files(base), note="adopt pre-compact")
 
-    # phase B: ONE read+write job per kind across every passing chunk
-    copied: dict[str, DataFrame] = {}
-    rewritten_ids: dict[str, list[int]] = {}
-    for kind in kinds:
-        todo = [
-            s // chunk
-            for s, _ in passing
-            if kind not in exact_kinds.get(s, set())
-        ]
-        if not todo:
-            continue
-        paths = [
-            os.path.join(base, p)
-            for (c, k), ps in sources.items()
-            if k == kind and c // chunk in set(todo)
-            for p in ps
-        ]
-        df = read_archive_data(spark, paths, kind).drop("_path")
-        # P1: trim file overlap to the passing chunks (semi-join on chunk id)
-        df = (
-            df.withColumn("_cid", F.floor(F.col("height") / chunk))
-            .join(F.broadcast(ids_df), F.col("_cid") == F.col("cid"), "left_semi")
-            .drop("_cid")
-        )
-        copied[kind] = df
-        rewritten_ids[kind] = todo
-        wr = ref_layout.write_range_files(
-            df,
-            root,
-            blockchain,
-            DataKind(kind),
-            chunk=chunk,
-            run="compact",
-            overwrite=True,
-            domain=todo,
-            fmt=fmt,
-            compression=compression,
-        )
-        result.written.extend(r["location"] for r in wr.collect() if not r["skipped"])
-
-    # phase C: J6/A7 reconciliation for ALL chunks in one grouped job
-    bad_ids: set[int] = set()
-    out_blocks = copied.get("blocks")
-    if out_blocks is not None:
-        cid = F.floor(F.col("height") / chunk).alias("cid")
-        # A7: copied heights must form exactly one island == chunk (for
-        # integer heights: distinct count == chunk AND min/max at bounds)
-        a7 = out_blocks.select(cid, "height").groupBy("cid").agg(
-            F.countDistinct("height").alias("n_heights"),
-            F.min("height").alias("h_min"),
-            F.max("height").alias("h_max"),
-        )
-        stat = a7
-        if block_json_schema is not None and "transactions" in copied:
-            # J6: txids promised by copied blocks == txids actually copied
-            promised = out_blocks.select(
-                cid,
-                F.explode_outer(
-                    F.from_json(F.col("json").cast("string"), block_json_schema)[
-                        tx_list_field
-                    ]
-                ).alias("txid"),
-            ).filter(F.col("txid").isNotNull())
-            actual = copied["transactions"].select(cid, "txid")
-            missing = (
-                promised.join(actual, ["cid", "txid"], "left_anti")
-                .groupBy("cid")
-                .agg(F.count("*").alias("n_missing"))
-            )
-            unexpected = (
-                actual.join(promised, ["cid", "txid"], "left_anti")
-                .groupBy("cid")
-                .agg(F.count("*").alias("n_unexpected"))
-            )
-            stat = (
-                a7.join(missing, "cid", "left")
-                .join(unexpected, "cid", "left")
-                .fillna(0, ["n_missing", "n_unexpected"])
-            )
-        else:
-            stat = a7.withColumn("n_missing", F.lit(0)).withColumn(
-                "n_unexpected", F.lit(0)
-            )
-        stat_rows = stat.collect()
-        for r in stat_rows:
-            c_start = int(r["cid"]) * chunk
-            ok = (
-                r["n_heights"] == chunk
-                and r["h_min"] == c_start
-                and r["h_max"] == c_start + chunk - 1
-                and r["n_missing"] == 0
-                and r["n_unexpected"] == 0
-            )
-            if not ok:
-                bad_ids.add(int(r["cid"]))
-        # a rewritten blocks chunk that produced NO rows at all never appears
-        # in `stat` — that's also a reconciliation failure
-        bad_ids |= set(rewritten_ids.get("blocks", [])) - {
-            int(r["cid"]) for r in stat_rows
-        }
+    # J6 needs the block JSON's tx-list key; without a schema it is skipped
+    tx_field = tx_list_field if block_json_schema is not None else None
+    rows = _rewrite(spark, base, passing, fmt, compression, tx_field)
+    bad = {(r["c_start"], r["c_end"]) for r in rows if not r["ok"]}
+    stats: dict[str, dict] = {}
+    for r in sorted(rows, key=lambda r: (r["c_start"], r["kind"])):
+        if r["location"] is not None:
+            result.written.append(r["location"])
+            if r["n_rows"]:
+                rel = os.path.relpath(r["location"], base)
+                stats[rel] = {"height": [r["h_min"], r["h_max"]]}
 
     to_delete: list[str] = []
-    for s, e in passing:
-        cid = s // chunk
-        if cid in bad_ids:
-            # roll back this chunk's outputs (reference: delete-on-drop of
-            # uncommitted files) so singles remain the only coverage
-            tag = f"range-{s:09d}_{e:09d}"
-            bad_abs = [p for p in result.written if tag in p]
-            delete_files(base, [os.path.relpath(p, base) for p in bad_abs], dry_run=dry_run)
-            result.written = [p for p in result.written if tag not in p]
-            result.skipped_chunks.append((s, e, "reconciliation failed"))
-        else:
-            for kind in kinds:
-                # a kind already held in its exact target file was neither
-                # rewritten nor are its other files touched (keep-as-is)
-                if kind in exact_kinds.get(s, set()):
-                    continue
-                to_delete.extend(sources.get((s, kind), []))
-            result.compacted_chunks.append((s, e))
+    for key, plan in sorted(passing.items()):
+        if key in bad:
+            result.skipped_chunks.append((*key, "reconciliation failed"))
+            continue
+        result.compacted_chunks.append(key)
+        to_delete.extend(p for paths, write in plan.values() if write for p in paths)
+
     if snapshot:
         # transactional commit (T5 upgrade): the consumed singles leave the
         # ARCHIVE atomically — one manifest swap replaces them with the new
         # range files — but stay on DISK until vacuum's retention window
         # expires, so readers pinned to an older snapshot keep working.
-        from ..sources import snapshots as SNAP
-        from ..sources.archive import list_archive_files
-
-        cur = SNAP.load_snapshot(base)
-        if cur is None:
-            # first snapshot: adopt the full pre-compact listing as v1 so
-            # the merge has a base (metadata-scale walk)
-            pre = sorted(set(list_archive_files(base)) - {
-                os.path.relpath(p, base) for p in result.written
-            })
-            cur = SNAP.publish_snapshot(base, pre, note="adopt pre-compact")
-        added = sorted(os.path.relpath(p, base) for p in result.written)
-        # optimistic-commit loop: a concurrent verify/curate publish between
-        # the source listing and this swap costs a retry, never a torn swap
+        # Optimistic-commit loop: a concurrent verify/curate publish between
+        # the listing and this swap costs a retry, never a torn swap. The
+        # rewrite rows carry each new file's height range, which keeps the
+        # manifest's min/max skipping index current.
         snap = SNAP.merge_replace_with_retry(
             base,
             remove=sorted(to_delete),
-            add=added,
+            add=sorted(os.path.relpath(p, base) for p in result.written),
             note=f"compact {rng.start}..{rng.end}",
-            # keep the manifest's min/max skipping index current: one
-            # distributed stats job over just the new range files
-            add_stats=(
-                SNAP.file_stats(spark, base, added, ["height"]) if added else None
-            ),
+            add_stats=stats or None,
         )
         result.snapshot_version = snap.version
         parent = SNAP.load_snapshot(base, snap.parent)  # the actual CAS base
-        result.pruned_from_snapshot = sorted(
-            set(to_delete) & set(parent.files if parent else cur.files)
-        )
+        result.pruned_from_snapshot = sorted(set(to_delete) & set(parent.files))
         return result
-    res = delete_files(base, sorted(to_delete), dry_run=dry_run)
-    result.deleted.extend(res.deleted)
+    result.deleted = delete_files(base, sorted(to_delete)).deleted
     return result

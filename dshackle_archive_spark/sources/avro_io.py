@@ -371,6 +371,51 @@ def write_avro_records(
 _RECORD_NAMES = {"blocks": "Block", "transactions": "Transaction", "traces": "TransactionTrace"}
 
 
+def read_avro_pdf(paths: list[str], spark_schema, expected_record: str | None = None):
+    """The records of Avro container files as one pandas frame with the
+    columns of ``spark_schema``: timestamp-millis longs become timestamps,
+    unknown writer fields are dropped, missing ones null-filled."""
+    import pandas as pd
+
+    names = [f.name for f in spark_schema.fields]
+    ts_cols = {
+        f.name for f in spark_schema.fields if f.dataType.typeName().startswith("timestamp")
+    }
+    rows = []
+    for path in paths:
+        for rec in read_avro_records(path, expected_record=expected_record):
+            row = {n: rec.get(n) for n in names}
+            for c in ts_cols:
+                if row[c] is not None:
+                    row[c] = pd.Timestamp(int(row[c]), unit="ms")
+            rows.append(row)
+    return pd.DataFrame(rows, columns=names)
+
+
+def read_archive_pdf(paths: list[str], kind: str):
+    """Archive files of one kind as one pandas frame — the in-task reader for
+    work that handles the rows in Python. Parquet files are read through
+    pyarrow into one table and converted once; ``.avro`` files decode
+    through the container codec."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ..schemas import TABLE_SCHEMAS
+
+    frames = []
+    pq_paths = [p for p in paths if not p.endswith(".avro")]
+    if pq_paths:
+        table = pa.concat_tables(
+            [pq.ParquetFile(p).read() for p in pq_paths], promote_options="default"
+        )
+        frames.append(table.replace_schema_metadata(None).to_pandas())
+    av_paths = [p for p in paths if p.endswith(".avro")]
+    if av_paths:
+        frames.append(read_avro_pdf(av_paths, TABLE_SCHEMAS[kind], _RECORD_NAMES[kind]))
+    return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+
+
 def read_avro_df(
     spark,
     paths: list,
@@ -408,22 +453,11 @@ def read_avro_df(
     out_fields = list(spark_schema.fields) + file_cols
     if with_path:
         out_fields.append(T.StructField("_path", T.StringType(), False))
-    names = [f.name for f in spark_schema.fields]
-    ts_cols = {
-        f.name for f in spark_schema.fields if f.dataType.typeName().startswith("timestamp")
-    }
 
     def gen(batches):
         for pdf in batches:
             for path, *values in zip(pdf["path"].tolist(), *(pdf[c].tolist() for c in extra)):
-                rows = []
-                for rec in read_avro_records(path, expected_record=expected_record):
-                    row = {n: rec.get(n) for n in names}
-                    for c in ts_cols:
-                        if row[c] is not None:
-                            row[c] = pd.Timestamp(int(row[c]), unit="ms")
-                    rows.append(row)
-                out = pd.DataFrame(rows, columns=names)
+                out = read_avro_pdf([path], spark_schema, expected_record=expected_record)
                 for c, v in zip(extra, values):
                     out[c] = v
                 if with_path:
@@ -444,7 +478,7 @@ def read_avro_df(
 def read_archive_data(spark, full_paths: list, kind: str, file_cols=()):
     """Format-dispatching archive read: parquet natively, ``.avro`` through
     the container codec — both with a ``_path`` column, unioned into one
-    DataFrame so verify/compact are format-agnostic.
+    DataFrame so verify is format-agnostic.
 
     ``file_cols`` works as in ``read_avro_df``: items of ``full_paths`` are
     then ``(path, *values)`` tuples. Parquet rows get the values through a

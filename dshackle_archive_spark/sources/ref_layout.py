@@ -116,6 +116,28 @@ def _fs_exists(fs, fs_path: str) -> bool:
     return fs.get_file_info([fs_path])[0].type != pafs.FileType.NotFound
 
 
+def _commit(path: str, payload: bytes) -> None:
+    """Write one whole file so a reader never sees it half written: object
+    stores (s3/gs/...) have no rename, but a single-object PUT is itself
+    atomic; posix paths are written to a temp name and renamed on success
+    (the reference's delete-on-drop, fs.rs:204-219)."""
+    if "://" in path:
+        fs, fs_path = _fs_and_path(path)
+        fs.create_dir(fs_path.rsplit("/", 1)[0], recursive=True)
+        with fs.open_output_stream(fs_path) as sink:
+            sink.write(payload)
+        return
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".inprogress"
+    try:
+        with open(tmp, "wb") as sink:
+            sink.write(payload)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
 def _serialize_group(
     kind: DataKind, out: pd.DataFrame, fmt: str, compression: str = "zstd"
 ) -> bytes:
@@ -239,11 +261,9 @@ def _write_group_fn(
                 lo_r = max(lo_r, requested[0])
                 hi_r = min(hi_r, requested[1])
             rel = range_file_path(Range(lo_r, hi_r), kind, fmt=fmt)
-        is_uri = "://" in base_dir
         path = _join_path(base_dir, rel)
-        if is_uri:
-            fs, fs_path = _fs_and_path(path)
-            skipped = _fs_exists(fs, fs_path) and not overwrite
+        if "://" in base_dir:
+            skipped = _fs_exists(*_fs_and_path(path)) and not overwrite
         else:
             skipped = os.path.exists(path) and not overwrite
         if not skipped:
@@ -253,24 +273,7 @@ def _write_group_fn(
             for c, dt in int_cols.items():
                 if c in out and out[c].dtype.kind == "f" and out[c].notna().all():
                     out[c] = out[c].astype(dt)
-            if is_uri:
-                # object stores (s3/gs/...) have no rename — a single-object
-                # PUT is itself atomic, so serialize in memory and write once
-                fs.create_dir(fs_path.rsplit("/", 1)[0], recursive=True)
-                with fs.open_output_stream(fs_path) as sink:
-                    sink.write(_serialize_group(kind, out, fmt, compression))
-            else:
-                # delete-on-failure commit: write to a temp name, rename on
-                # success (the reference's delete-on-drop, fs.rs:204-219)
-                os.makedirs(os.path.dirname(path), exist_ok=True)
-                tmp = path + ".inprogress"
-                try:
-                    with open(tmp, "wb") as sink:
-                        sink.write(_serialize_group(kind, out, fmt, compression))
-                    os.replace(tmp, path)
-                finally:
-                    if os.path.exists(tmp):
-                        os.remove(tmp)
+            _commit(path, _serialize_group(kind, out, fmt, compression))
         return pd.DataFrame(
             [
                 {
@@ -305,18 +308,15 @@ def write_range_files(
     maturity: str | None = None,
     fmt: str = "parquet",
     requested: "Range | None" = None,
-    domain: "Iterable[int] | None" = None,
     compression: str = "zstd",
 ) -> DataFrame:
     """Write ``df`` as reference-layout range files, one per aligned chunk.
 
     ``requested`` bounds the advertised coverage of edge chunks (unaligned
-    splits / fix sub-ranges). ``domain`` is an explicit list of chunk ids
-    (``height // chunk``) that must each emit a file even with zero rows —
-    when omitted it is derived from ``requested``. Returns the
-    write-result/notification DataFrame (action runs on count/collect). One
-    shuffle on the chunk key; each output file is produced by exactly one
-    task.
+    splits / fix sub-ranges), and every chunk it touches emits a file even
+    with zero rows. Returns the write-result/notification DataFrame (action
+    runs on count/collect). One shuffle on the chunk key; each output file
+    is produced by exactly one task.
     """
     base = _join_path(root, blockchain.lower())
     req = (requested.start, requested.end) if requested is not None else None
@@ -324,12 +324,8 @@ def write_range_files(
     # chunk-key domain comes from the REQUEST, not the data rows: a chunk
     # with zero rows (transaction-less blocks) must still emit its file.
     # Sentinel rows are all-null and filtered inside the writer.
-    dom = None
-    if domain is not None:
-        dom = df.sparkSession.createDataFrame([(int(i),) for i in domain], "id long")
-    elif requested is not None:
+    if requested is not None:
         dom = df.sparkSession.range(requested.start // chunk, requested.end // chunk + 1)
-    if dom is not None:
         sentinels = dom.select(
             *[F.lit(None).cast(f.dataType).alias(f.name) for f in df.schema.fields],
             F.col("id").cast("long").alias("_file_group"),

@@ -6,11 +6,12 @@ leg does not cover: it REWRITES data (singles → range files, tmp+rename
 commit, overwrite=True) and then swaps the manifest in one CAS commit. This
 probe archives 200 single-block files (blocks + txes) on real executor
 JVMs, then runs the transactional compact while SIGKILLing every live
-executor right as the SECOND kind's rewrite job starts — the write job,
-the J6/A7 reconciliation joins, and the snapshot commit must complete via
-standalone-worker respawn + task/stage retries, and the caller asserts the
-final snapshot (file list + per-kind content digest over stable columns)
-is IDENTICAL to an undisturbed clean run's.
+executor as soon as the fused rewrite job (read, J6/A7 reconciliation and
+write of every chunk and kind) has a running stage — the rewrite and the
+snapshot commit must complete via standalone-worker respawn + task
+retries, and the caller asserts the final snapshot (file list + per-kind
+content digest over stable columns) is IDENTICAL to an undisturbed clean
+run's.
 
 Usage: compact_chaos_probe.py WORK_DIR OUT_JSON MODE   # MODE: chaos|clean
 Always exits 0 — the caller asserts on the JSON.
@@ -23,6 +24,7 @@ import json
 import os
 import signal
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -68,9 +70,8 @@ def main() -> int:
 
     from dshackle_archive_spark.core import DataKind, Range
     from dshackle_archive_spark.plans.archive_plan import archive_single_blocks
-    from dshackle_archive_spark.plans.compact_plan import compact
+    from dshackle_archive_spark.plans import compact_plan
     from dshackle_archive_spark.session import get_spark
-    from dshackle_archive_spark.sources import ref_layout
     from dshackle_archive_spark.sources import snapshots as SNAP
     from dshackle_archive_spark.sources.fetcher import FetchPolicy
     from dshackle_archive_spark.sources.mock_chain import MockChain
@@ -91,32 +92,41 @@ def main() -> int:
                               policy=FetchPolicy(parallel=4))
 
         if mode == "chaos":
-            real_write = ref_layout.write_range_files
-            state = {"calls": 0}
+            real_rewrite = compact_plan._rewrite
+            tracker = spark.sparkContext.statusTracker()
+            done = threading.Event()
 
-            def killing_write(*a, **kw):
-                state["calls"] += 1
-                if state["calls"] == 2 and res["killed"] is None:
-                    # the 2nd kind's rewrite runs entirely on respawned
-                    # executors; phase-C reconciliation follows
-                    victims = _executor_pids()
-                    if victims:
-                        res["killed"] = victims[0]
-                        for pid in victims:
-                            try:
-                                os.kill(pid, signal.SIGKILL)
-                            except OSError:
-                                pass
-                        time.sleep(2)  # let the scheduler notice the loss
-                return real_write(*a, **kw)
+            def kill_when_running():
+                # the fused rewrite job's stage is live: its tasks die with
+                # their executors and rerun on respawned ones
+                while not tracker.getActiveStageIds():
+                    if done.wait(0.01):
+                        return  # the job ended unseen: the probe misfired
+                victims = _executor_pids()
+                if victims:
+                    res["killed"] = victims[0]
+                    for pid in victims:
+                        try:
+                            os.kill(pid, signal.SIGKILL)
+                        except OSError:
+                            pass
 
-            ref_layout.write_range_files = killing_write
+            def killing_rewrite(*a, **kw):
+                killer = threading.Thread(target=kill_when_running, daemon=True)
+                killer.start()
+                try:
+                    return real_rewrite(*a, **kw)
+                finally:
+                    done.set()
+                    killer.join()
 
-        cres = compact(spark, work, chain.blockchain_id, rng, tables=tables,
-                       chunk=100, block_json_schema=chain.block_json_schema,
-                       snapshot=True)
+            compact_plan._rewrite = killing_rewrite
+
+        cres = compact_plan.compact(spark, work, chain.blockchain_id, rng, tables=tables,
+                                    chunk=100, block_json_schema=chain.block_json_schema,
+                                    snapshot=True)
         if mode == "chaos":
-            ref_layout.write_range_files = real_write
+            compact_plan._rewrite = real_rewrite
         res["compacted"] = cres.compacted_chunks
         res["skipped"] = cres.skipped_chunks
         res["snapshot_version"] = cres.snapshot_version

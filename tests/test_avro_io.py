@@ -180,6 +180,47 @@ def test_avro_archive_lifecycle(spark, tmp_path):
     rep = verify(spark, chain, str(tmp_path), Range(100, 299), tables=BT)
     assert rep.failures == [] and rep.deleted == []
 
+    # compact migrates avro singles to parquet range files holding exactly
+    # the singles' records, column for column (timestamp-millis longs and
+    # the all-null uncle columns included)
+    from datetime import timezone
+
+    import pyarrow.parquet as pq
+
+    from dshackle_archive_spark.plans.archive_plan import archive_single_blocks
+    from dshackle_archive_spark.plans.compact_plan import compact
+    from dshackle_archive_spark.sources.ref_layout import _pa_schema
+
+    archive_single_blocks(spark, chain, str(tmp_path), Range(300, 319), tables=BT,
+                          policy=FetchPolicy(parallel=4), fmt="avro")
+    base = tmp_path / "eth"
+    singles = [p for p in list_archive_files(str(base)) if "range-" not in p]
+    assert len(singles) == 40
+
+    def key(rec):
+        return rec["height"], rec.get("index", 0)
+
+    before = {
+        ext: sorted((r for p in singles if f".{ext}.avro" in p
+                     for r in read_avro_records(str(base / p))), key=key)
+        for ext in ("block", "txes")
+    }
+    res = compact(spark, str(tmp_path), "ETH", Range(300, 319), tables=BT, chunk=10,
+                  block_json_schema=chain.block_json_schema)
+    assert res.compacted_chunks == [(300, 309), (310, 319)]
+    after = [p for p in list_archive_files(str(base)) if p not in files]
+    assert len(after) == 4 and all(p.endswith(".parquet") for p in after)
+    for ext, kind in (("block", DataKind.BLOCKS), ("txes", DataKind.TRANSACTIONS)):
+        tables = [pq.read_table(str(base / p)) for p in after if f".{kind.range_ext}." in p]
+        assert all(t.schema.remove_metadata().equals(_pa_schema(kind)) for t in tables)
+        got = sorted((r for t in tables for r in t.to_pylist()), key=key)
+        for r in got:
+            for c in ("archiveTimestamp", "timestamp"):
+                # back to timestamp-millis (the parquet timestamps are naive UTC)
+                r[c] = int(r[c].replace(tzinfo=timezone.utc).timestamp() * 1000)
+        assert got == before[ext], ext
+    assert all(r["uncle0Json"] is None and r["uncle1Json"] is None for r in before["block"])
+
 
 def test_avro_verify_detects_corruption(spark, tmp_path):
     from dshackle_archive_spark.core import DataKind, Range

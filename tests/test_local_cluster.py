@@ -369,8 +369,8 @@ def test_compact_chaos_executor_loss_matches_clean(tmp_path):
     """Round-11: the one lifecycle mutation the verify→fix leg doesn't
     cover — ``compact --snapshot`` REWRITES data (singles → range files,
     tmp+rename, overwrite) then CAS-swaps the manifest. SIGKILL every
-    executor as the second kind's rewrite starts: the write job, the
-    J6/A7 reconciliation, and the snapshot commit must complete on
+    executor once the fused rewrite job is running: the rewrite (read,
+    J6/A7 reconciliation, write) and the snapshot commit must complete on
     respawned executors with a final snapshot identical to a clean run."""
     script = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                           "compact_chaos_probe.py")

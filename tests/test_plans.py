@@ -6,6 +6,7 @@ chain, with golden file-inventory assertions (the reference's e2e test style,
 import json
 import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -386,35 +387,202 @@ def test_verify_duplicate_deletes_only_duplicated_kind(spark, tmp_path):
 
 
 def test_compact_issues_constant_jobs(spark, tmp_path):
-    """The compaction gate + rewrite is O(1) Spark jobs per kind regardless of
-    chunk count (the reference loops chunks; Spark job launches must not —
-    ~100 ms each means a 1,000-chunk scope would serialize minutes of pure
-    scheduling). Compare job counts for a 1-chunk vs a 5-chunk compact."""
+    """compact gates every chunk on the driver and rewrites all kinds of all
+    passing chunks in one job, so its job count does not grow with the chunk
+    count (the reference loops chunks; ~100 ms per Spark job would serialize
+    minutes of scheduling on a 1,000-chunk scope), and the rewrite runs at
+    most ``defaultParallelism`` tasks: no listing job with a task per path."""
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
 
-    def count_jobs(root, rng):
-        group = f"compact-jobs-{rng.start}-{rng.end}"
+    def run(chunks):
+        root = str(tmp_path / f"c{chunks}")
+        rng = Range(0, chunks * 10 - 1)
+        archive_single_blocks(spark, CHAIN, root, rng, tables=BT, policy=POLICY)
+        group = f"compact-jobs-{chunks}"
         sc.setJobGroup(group, "count compact jobs")
         try:
-            res = compact(spark, root, "ETH", rng, tables=BT, chunk=100,
+            res = compact(spark, root, "ETH", rng, tables=BT, chunk=10,
                           block_json_schema=CHAIN.block_json_schema)
         finally:
             sc.setJobGroup(None, None)
-        return res, len(sc.statusTracker().getJobIdsForGroup(group))
+        jobs = tracker.getJobIdsForGroup(group)
+        tasks = [
+            sum(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds)
+            for j in jobs
+        ]
+        assert res.compacted_chunks == [(s, s + 9) for s in range(0, chunks * 10, 10)]
+        assert len(tree(root)) == chunks * 2
+        return len(jobs), tasks
 
-    small = tmp_path / "small"
-    big = tmp_path / "big"
-    archive_single_blocks(spark, CHAIN, str(small), Range(0, 99), tables=BT, policy=POLICY)
-    archive_single_blocks(spark, CHAIN, str(big), Range(0, 499), tables=BT, policy=POLICY)
-    res1, jobs1 = count_jobs(str(small), Range(0, 99))
-    res5, jobs5 = count_jobs(str(big), Range(0, 499))
-    assert res1.compacted_chunks == [(0, 99)]
-    assert res5.compacted_chunks == [(0, 99), (100, 199), (200, 299), (300, 399), (400, 499)]
-    # 5× the chunks must NOT mean 5× the jobs (the old per-chunk loop issued
-    # ~6 jobs/chunk); allow a little AQE stage-count jitter
-    assert jobs5 <= jobs1 + 4, f"1 chunk: {jobs1} jobs, 5 chunks: {jobs5} jobs"
-    rep = verify(spark, CHAIN, str(big), Range(0, 499), tables=BT)
-    assert rep.failures == []
+    (jobs2, tasks2), (jobs20, tasks20) = run(2), run(20)
+    assert jobs2 == jobs20 <= 3, f"2 chunks: {jobs2} jobs, 20 chunks: {jobs20} jobs"
+    assert max(tasks2 + tasks20) <= sc.defaultParallelism, (tasks2, tasks20)
+
+
+def test_compact_leaves_unresolved_fork_to_verify(spark, tmp_path):
+    """A height with two blocks files (a fork verify has not resolved yet)
+    keeps its chunk uncompacted. Compacting it would merge both twins into
+    the range file — 51 rows for 50 heights — and delete every single;
+    verify would then fail the island and delete both range files, losing
+    every height of the chunk."""
+    root, rng = str(tmp_path), Range(30_000, 30_049)
+    forked = MockChain(head_height=100_000, fork_at=frozenset({30_010}))
+    archive_single_blocks(spark, forked, root, rng, tables=BT, policy=POLICY, forks=True)
+    singles = tree(tmp_path)
+    assert len(singles) == 101
+    res = compact(spark, root, "ETH", rng, tables=BT, chunk=50,
+                  block_json_schema=forked.block_json_schema)
+    assert res.compacted_chunks == [] and res.written == [] and res.deleted == []
+    assert res.skipped_chunks == [(30_000, 30_049, "unresolved fork")]
+    assert tree(tmp_path) == singles
+    rep = verify(spark, forked, root, rng, tables=BT)
+    assert [f["reason"] for f in rep.failures] == ["fork_loser"] and len(rep.deleted) == 1
+    res = compact(spark, root, "ETH", rng, tables=BT, chunk=50,
+                  block_json_schema=forked.block_json_schema)
+    assert res.compacted_chunks == [(30_000, 30_049)] and len(res.deleted) == 100
+    rep = verify(spark, forked, root, rng, tables=BT)
+    assert rep.failures == [] and rep.deleted == []
+    blocks = [p for p in tree(tmp_path) if ".blocks." in p]
+    heights = spark.read.parquet(str(tmp_path / "eth" / blocks[0])).select("height")
+    assert sorted(r[0] for r in heights.collect()) == list(range(30_000, 30_050))
+
+
+def test_compact_gate_verdicts_on_the_driver():
+    """Driver phase, no Spark: one verdict per chunk from the inventory rows,
+    in the order of the reference's checks, and each passing chunk's plan —
+    the sources per kind, or the exact-range file kept as is."""
+    from dshackle_archive_spark.plans.compact_plan import _gate
+
+    def singles(lo, hi, kind="blocks", h=None):
+        return [(f"{x}.{kind}", kind, x, x, h) for x in range(lo, hi + 1)]
+
+    rows = (
+        # 0..9: both kinds as exact-range files
+        [("r0.b", "blocks", 0, 9, None), ("r0.t", "transactions", 0, 9, None)]
+        # 10..19: a file reaching into 20..29
+        + singles(10, 15) + [("o.b", "blocks", 16, 25, None)] + singles(10, 19, "transactions")
+        # 30..39: txes miss height 35
+        + singles(30, 39) + singles(30, 34, "transactions") + singles(36, 39, "transactions")
+        # 40..49: two blocks files for 40 with the same name parts
+        + singles(40, 49) + [("40.b.avro", "blocks", 40, 40, None)]
+        + singles(40, 49, "transactions")
+        # 50..59: two fork twins at 52
+        + singles(50, 59, h="a") + [("52.f", "blocks", 52, 52, "f")]
+        + singles(50, 59, "transactions")
+        # 60..69: blocks already compacted, txes still singles; a foreign
+        # kind's singles do not count
+        + [("r6.b", "blocks", 60, 69, None)] + singles(60, 69, "transactions")
+        + singles(60, 69, "traces")
+    )
+    chunks = Range(0, 69).split_chunks(10, aligned=True)
+    skipped, passing = _gate(rows, chunks, ("blocks", "transactions"), 10)
+    assert skipped == [
+        (0, 9, "already compacted"),
+        (10, 19, "file range crosses chunk boundary"),
+        (20, 29, "file range crosses chunk boundary"),
+        (30, 39, "transactions does not exactly cover the chunk"),
+        (40, 49, "duplicate files in chunk"),
+        (50, 59, "unresolved fork"),
+    ]
+    assert passing == {
+        (60, 69): {
+            "blocks": (["r6.b"], False),
+            "transactions": (sorted(f"{x}.transactions" for x in range(60, 70)), True),
+        }
+    }
+
+
+def _table(paths, sort):
+    """The rows of parquet files, concatenated and sorted, without the pandas
+    metadata pyarrow stores in the schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pa.concat_tables([pq.read_table(p) for p in paths]).sort_by([(c, "ascending") for c in sort])
+    return t.replace_schema_metadata(None)
+
+
+def test_compact_keeps_every_source_row(spark, tmp_path):
+    """The range files hold exactly the union of the parquet singles' rows,
+    column for column: archive and block timestamps, payloads, and uncle
+    columns that stay typed binary even when all null. A chunk whose blocks
+    list no transactions still gets its (empty) txes range file."""
+    from dshackle_archive_spark.sources.ref_layout import _pa_schema
+
+    class TxlessChain(MockChain):  # blocks below 110 list no transactions
+        def tx_ids(self, height):
+            return [] if height < 110 else super().tx_ids(height)
+
+    uncled = TxlessChain(head_height=10_000, uncle_at=frozenset({103}))
+    root, rng = str(tmp_path), Range(100, 119)
+    archive_single_blocks(spark, uncled, root, rng, tables=BT, policy=POLICY)
+    sort = {DataKind.BLOCKS: ["height"], DataKind.TRANSACTIONS: ["height", "index"]}
+
+    def rows(kind):
+        paths = [p for p in tree(tmp_path) if parse_filename(p).kind == kind]
+        return _table([tmp_path / "eth" / p for p in paths], sort[kind])
+
+    before = {kind: rows(kind) for kind in sort}
+    res = compact(spark, root, "ETH", rng, tables=BT, chunk=10,
+                  block_json_schema=uncled.block_json_schema)
+    assert res.compacted_chunks == [(100, 109), (110, 119)]
+    assert all("range-" in p for p in tree(tmp_path))
+    for kind in sort:
+        after = rows(kind)
+        assert after.equals(before[kind]), kind
+        assert after.schema.equals(_pa_schema(kind))
+    d = tmp_path / "eth" / "000000000"
+    second = _table([d / "range-000000110_000000119.blocks.parquet"], ["height"])
+    assert second.column("uncle0Json").null_count == 10  # all null, still binary
+    assert _table([d / "range-000000100_000000109.txes.parquet"], ["height"]).num_rows == 0
+
+
+def _drop_first_tx(df):
+    return df.iloc[1:]
+
+
+def _add_tx(df):
+    extra = df.iloc[:1].copy()
+    extra["txid"], extra["index"] = "TX-NOT-LISTED", len(df)
+    return pd.concat([df, extra])
+
+
+def _double_row(df):
+    return pd.concat([df, df])
+
+
+def _garble_json(df):
+    return df.assign(json=[b"{not json"] * len(df))
+
+
+@pytest.mark.parametrize(
+    "ext, edit",
+    [("txes", _drop_first_tx), ("txes", _add_tx), ("block", _double_row),
+     ("block", _garble_json)],
+    ids=["missing_txid", "extra_txid", "duplicate_height_row", "unparsable_block_json"],
+)
+def test_compact_reconciliation_failure_skips_chunk(spark, tmp_path, ext, edit):
+    """Damage that the file names do not show fails the reconciliation: the
+    chunk is skipped, no range file is written, its singles stay, and the
+    clean chunk next to it still compacts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path)
+    archive_single_blocks(spark, CHAIN, root, Range(0, 19), tables=BT, policy=POLICY)
+    victim = str(tmp_path / "eth" / "000000000" / "000000000" / f"000000005.{ext}.parquet")
+    table = pq.read_table(victim)
+    pq.write_table(pa.Table.from_pandas(edit(table.to_pandas()), table.schema,
+                                        preserve_index=False), victim)
+    res = compact(spark, root, "ETH", Range(0, 19), tables=BT, chunk=10,
+                  block_json_schema=CHAIN.block_json_schema)
+    assert res.skipped_chunks == [(0, 9, "reconciliation failed")]
+    assert res.compacted_chunks == [(10, 19)]
+    assert sorted(tree(tmp_path)) == sorted(
+        [f"000000000/000000000/{h:09d}.{e}.parquet" for h in range(10) for e in ("block", "txes")]
+        + [f"000000000/range-000000010_000000019.{e}.parquet" for e in ("blocks", "txes")]
+    )
 
 
 def test_fix_batches_gaps_into_one_job_per_kind(spark, tmp_path):
