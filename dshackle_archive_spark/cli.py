@@ -503,7 +503,7 @@ def main(argv: list[str] | None = None) -> int:
             from .sources import ref_layout
 
             notif_frames = [ref_layout.notifications_df(
-                spark.createDataFrame(st.write_rows, ref_layout.WRITE_RESULT_SCHEMA)
+                ref_layout.write_results_df(spark, st.write_rows)
             )]
 
     notif_frames = [f for f in notif_frames if f is not None]

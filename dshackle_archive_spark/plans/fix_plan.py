@@ -26,7 +26,7 @@ from ..core.ranges import Range, merge_ranges
 from ..sources import ref_layout
 from ..sources.archive import inventory_rows
 from ..sources.fetcher import FetchPolicy, fetch_blocks, fetch_table_for_heights
-from .archive_plan import ArchiveResult
+from .archive_plan import ArchiveResult, archive_result
 
 
 @dataclass
@@ -85,18 +85,7 @@ def fix(
         # every kind's fetch+write runs in the one collect
         all_rows = writes.collect() if writes is not None else []
         for kind in by_kind:
-            rows = [r for r in all_rows if r["type"] == kind]
-            notif = ref_layout.notifications_df(
-                spark.createDataFrame(rows, ref_layout.WRITE_RESULT_SCHEMA)
-            )
-            results.append(
-                ArchiveResult(
-                    notifications=notif,
-                    written=sum(1 for r in rows if not r["skipped"]),
-                    skipped=sum(1 for r in rows if r["skipped"]),
-                    files=[r["location"] for r in rows if not r["skipped"]],
-                )
-            )
+            results.append(archive_result(spark, [r for r in all_rows if r["type"] == kind]))
     out = FixResult(missing=work, archived=results)
     if snapshot and not dry_run:
         # add-only manifest commit: the repaired files join the archive in

@@ -184,59 +184,54 @@ def heights_df(
     return df.repartition(n_parts).withColumnRenamed("id", "height")
 
 
+def block_row(provider, h: int, policy: FetchPolicy, fork: bool = False) -> dict:
+    """The blocks row of height ``h`` (reference block.rs:20-94); ``fork``
+    selects the provider's fork variant, whose ``blockId`` differs."""
+    blk = policy.call(provider.block, h, fork)
+    # uncle payloads (ethereum.rs:243-248; schema stores the ETH-consensus
+    # maximum of two)
+    uncle_fn = getattr(provider, "uncles", None)
+    uncles = policy.call(uncle_fn, h, fork) if uncle_fn else []
+    return {
+        "blockchainType": provider.blockchain_type,
+        "blockchainId": provider.blockchain_id,
+        "archiveTimestamp": _now_utc(),
+        "height": h,
+        "blockId": blk["hash"],
+        "parentId": blk["parent"],
+        "timestamp": pd.Timestamp(provider.block_timestamp_ms(h), unit="ms"),
+        "json": policy.call(provider.block_json, h, fork),
+        "unclesCount": len(uncles),
+        "uncle0Json": uncles[0] if len(uncles) > 0 else None,
+        "uncle1Json": uncles[1] if len(uncles) > 1 else None,
+    }
+
+
 def fetch_blocks(
     spark: SparkSession,
     provider,
     rng: Range,
     policy: FetchPolicy = FetchPolicy(),
-    forks: bool = False,
 ) -> DataFrame:
-    """Fetch the blocks table for a height range (reference block.rs:20-94).
-
-    ``forks=True`` additionally emits the provider's fork variant at fork
-    heights (stream-mode behavior T5: both versions co-exist keyed by
-    (height, blockId) until verify prunes losers).
-    """
+    """Fetch the blocks table for a height range (reference block.rs:20-94)."""
     cap = policy.thread_caps().blocks  # blocks cap (global.rs:78-97)
-
-    uncle_fn = getattr(provider, "uncles", None)
+    cols = [f.name for f in BLOCKS_SCHEMA.fields]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for h in pdf["height"].tolist():
-                variants = [False] + ([True] if forks and h in provider.fork_at else [])
-                for fork in variants:
-                    blk = policy.call(provider.block, h, fork)
-                    # uncle payloads (ethereum.rs:243-248; schema stores the
-                    # ETH-consensus maximum of two)
-                    uncles = policy.call(uncle_fn, h, fork) if uncle_fn else []
-                    rows.append(
-                        {
-                            "blockchainType": provider.blockchain_type,
-                            "blockchainId": provider.blockchain_id,
-                            "archiveTimestamp": _now_utc(),
-                            "height": h,
-                            "blockId": blk["hash"],
-                            "parentId": blk["parent"],
-                            "timestamp": pd.Timestamp(
-                                provider.block_timestamp_ms(h), unit="ms"
-                            ),
-                            "json": policy.call(provider.block_json, h, fork),
-                            "unclesCount": len(uncles),
-                            "uncle0Json": uncles[0] if len(uncles) > 0 else None,
-                            "uncle1Json": uncles[1] if len(uncles) > 1 else None,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in BLOCKS_SCHEMA.fields])
+            rows = [block_row(provider, h, policy) for h in pdf["height"].tolist()]
+            yield pd.DataFrame(rows, columns=cols)
 
     hs = heights_df(spark, rng, cap)
     return hs.mapInPandas(gen, schema=BLOCKS_SCHEMA)
 
 
-def _tx_rows_for_block(
+def tx_rows(
     provider, h: int, blk_hash: str, with_traces: bool, policy: FetchPolicy
 ) -> list[dict]:
+    """The txes (or, ``with_traces``, traces) rows of height ``h``, tagged
+    with ``blk_hash``, the hash of the block they were fetched for
+    (reference table.rs:17-150): one row per tx index."""
     ts = pd.Timestamp(provider.block_timestamp_ms(h), unit="ms")
     details_fn = getattr(provider, "tx_details", None)
     out = []
@@ -313,9 +308,7 @@ def fetch_table_for_heights(
             rows = []
             for h in pdf["height"].tolist():
                 blk = policy.call(provider.block, h)
-                rows.extend(
-                    _tx_rows_for_block(provider, h, blk["hash"], with_traces, policy)
-                )
+                rows.extend(tx_rows(provider, h, blk["hash"], with_traces, policy))
             yield pd.DataFrame(rows, columns=cols)
 
     hs = heights_df(spark, rng, cap)

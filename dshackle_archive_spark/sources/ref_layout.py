@@ -205,6 +205,52 @@ def _write_avro_pdf(
     )
 
 
+_SORT_COLS = {kind: ["height"] if kind == DataKind.BLOCKS else ["height", "index"]
+              for kind in DataKind}
+
+
+def write_file(
+    base_dir: str,
+    rel: str,
+    kind: DataKind,
+    data: pd.DataFrame,
+    lo: int,
+    hi: int,
+    blockchain: str,
+    run: str,
+    overwrite: bool,
+    maturity: str | None,
+    fmt: str,
+    compression: str = "zstd",
+) -> dict:
+    """Write ``data`` (one file's rows) to ``rel`` under ``base_dir`` unless
+    the file exists and ``overwrite`` is off (S13 keep-existing), and return
+    its write-result row, which advertises the heights ``lo``..``hi``."""
+    path = _join_path(base_dir, rel)
+    if "://" in base_dir:
+        skipped = _fs_exists(*_fs_and_path(path)) and not overwrite
+    else:
+        skipped = os.path.exists(path) and not overwrite
+    if not skipped:
+        out = data.sort_values(_SORT_COLS[kind])
+        _commit(path, _serialize_group(kind, out, fmt, compression))
+    return {
+        "version": VERSION,
+        "ts": datetime.now(timezone.utc).replace(tzinfo=None),
+        "blockchain": blockchain,
+        "type": kind.value,
+        "run": run,
+        "heightStart": lo,
+        "heightEnd": hi,
+        # locations are published (stdout JSON, notify JSONL, Pulsar) —
+        # never let URI-userinfo credentials through
+        "location": strip_userinfo(path),
+        "maturity": maturity,
+        "skipped": skipped,
+        "n_rows": 0 if skipped else len(data),
+    }
+
+
 def _write_group_fn(
     base_dir: str,
     kind: DataKind,
@@ -218,8 +264,6 @@ def _write_group_fn(
     requested: tuple[int, int] | None = None,
     compression: str = "zstd",
 ):
-    sort_cols = ["height"] if kind == DataKind.BLOCKS else ["height", "index"]
-
     from ..schemas import TABLE_SCHEMAS
 
     int_cols = {
@@ -234,7 +278,12 @@ def _write_group_fn(
         # its (empty) file, matching the reference's unconditional
         # target.create() (table.rs); without it verify flags the group
         # incomplete forever and fix never converges
-        data = pdf[pdf["height"].notna()]
+        data = pdf[pdf["height"].notna()].drop(columns=["_file_group"])
+        # the sentinel union makes int columns nullable (float64 in
+        # pandas); restore exact integer dtypes before encoding
+        for c, dt in int_cols.items():
+            if c in data and data[c].dtype.kind == "f" and data[c].notna().all():
+                data[c] = data[c].astype(dt)
         group_key = pdf["_file_group"].iloc[0]
         if chunk is None:
             lo = int(str(group_key).split("_", 1)[0])
@@ -261,38 +310,9 @@ def _write_group_fn(
                 lo_r = max(lo_r, requested[0])
                 hi_r = min(hi_r, requested[1])
             rel = range_file_path(Range(lo_r, hi_r), kind, fmt=fmt)
-        path = _join_path(base_dir, rel)
-        if "://" in base_dir:
-            skipped = _fs_exists(*_fs_and_path(path)) and not overwrite
-        else:
-            skipped = os.path.exists(path) and not overwrite
-        if not skipped:
-            out = data.drop(columns=["_file_group"], errors="ignore").sort_values(sort_cols)
-            # the sentinel union makes int columns nullable (float64 in
-            # pandas); restore exact integer dtypes before encoding
-            for c, dt in int_cols.items():
-                if c in out and out[c].dtype.kind == "f" and out[c].notna().all():
-                    out[c] = out[c].astype(dt)
-            _commit(path, _serialize_group(kind, out, fmt, compression))
-        return pd.DataFrame(
-            [
-                {
-                    "version": VERSION,
-                    "ts": datetime.now(timezone.utc).replace(tzinfo=None),
-                    "blockchain": blockchain,
-                    "type": kind.value,
-                    "run": run,
-                    "heightStart": lo_r,
-                    "heightEnd": hi_r,
-                    # locations are published (stdout JSON, notify JSONL,
-                    # Pulsar) — never let URI-userinfo credentials through
-                    "location": strip_userinfo(path),
-                    "maturity": maturity,
-                    "skipped": skipped,
-                    "n_rows": 0 if skipped else len(data),
-                }
-            ]
-        )
+        row = write_file(base_dir, rel, kind, data, lo_r, hi_r, blockchain, run,
+                         overwrite, maturity, fmt, compression)
+        return pd.DataFrame([row])
 
     return write_group
 
@@ -400,30 +420,29 @@ def write_single_files(
     maturity: str | None = None,
     hash_in_name: bool = False,
     fmt: str = "parquet",
-    requested: "Range | None" = None,
     compression: str = "zstd",
 ) -> DataFrame:
-    """Write one file per (height[, blockId]) — stream mode's fork-tolerant
-    single-block files (T5: the hash qualifier keeps both fork versions).
-
-    ``requested`` (non-fork mode only) makes every height in the range emit a
-    file even when it has no rows — e.g. a transaction-less block still gets
-    its ``NNN.txes`` file, like the reference's unconditional create."""
+    """Write one file per (height[, blockId]) of ``df``'s rows — stream
+    mode's fork-tolerant single-block files (T5: the hash qualifier keeps
+    both fork versions). ``archive_plan.archive_single_blocks`` writes the
+    same files from its fused fetch task; this DataFrame form only feeds
+    the per-layer benchmark timings and the object-store tests."""
     base = _join_path(root, blockchain.lower())
     keys = ["height", "blockId"] if hash_in_name else ["height"]
     grouped = df.withColumn("_file_group", F.concat_ws("_", *[F.col(k) for k in keys]))
-    if requested is not None and not hash_in_name:
-        dom = df.sparkSession.range(requested.start, requested.end + 1)
-        sentinels = dom.select(
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in df.schema.fields],
-            F.col("id").cast("string").alias("_file_group"),
-        )
-        grouped = grouped.unionByName(sentinels)
     return grouped.groupBy("_file_group").applyInPandas(
         _write_group_fn(base, kind, blockchain, run, None, overwrite, maturity, hash_in_name, fmt,
                         compression=compression),
         schema=WRITE_RESULT_SCHEMA,
     )
+
+
+def write_results_df(spark, rows: list) -> DataFrame:
+    """Collected write-result rows as a DataFrame. Built from a pandas
+    frame, it reaches the JVM as an Arrow local table with no Python
+    worker pass."""
+    pdf = pd.DataFrame([tuple(r) for r in rows], columns=WRITE_RESULT_SCHEMA.names)
+    return spark.createDataFrame(pdf, WRITE_RESULT_SCHEMA)
 
 
 def notifications_df(write_results: DataFrame) -> DataFrame:

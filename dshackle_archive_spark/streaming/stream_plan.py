@@ -10,9 +10,12 @@ blocks before the first head via the fix plan (T3). ``follow='finalized'``
 trails the head by a finality margin and tags notifications with maturity
 (T2). Graceful shutdown is the StreamingQuery stop (T7).
 
-The per-batch work is the same distributed archive plan as batch mode — the
-stream layer only decides *which heights* each batch covers, so everything
-scales exactly like ``archive``.
+The stream layer only decides *which heights* each batch covers; the batch
+itself is ``archive_plan.archive_single_blocks``, ONE Spark job with no
+shuffle whose tasks fetch each height's block (fork twin included) and
+txes/traces and write every kind's single-block file. A batch of a few
+heights is bound by job and task launches, not data, so it runs at most
+``defaultParallelism`` tasks.
 """
 
 from __future__ import annotations

@@ -386,6 +386,21 @@ def test_verify_duplicate_deletes_only_duplicated_kind(spark, tmp_path):
     assert (d / "range-000000100_000000199.txes.parquet").exists()
 
 
+def _jobs_and_tasks(spark, group, fn):
+    """``fn()``'s result and the task count of each Spark job it ran."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, [
+        sum(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds)
+        for j in tracker.getJobIdsForGroup(group)
+    ]
+
+
 def test_compact_issues_constant_jobs(spark, tmp_path):
     """compact gates every chunk on the driver and rewrites all kinds of all
     passing chunks in one job, so its job count does not grow with the chunk
@@ -393,31 +408,113 @@ def test_compact_issues_constant_jobs(spark, tmp_path):
     minutes of scheduling on a 1,000-chunk scope), and the rewrite runs at
     most ``defaultParallelism`` tasks: no listing job with a task per path."""
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
 
     def run(chunks):
         root = str(tmp_path / f"c{chunks}")
         rng = Range(0, chunks * 10 - 1)
         archive_single_blocks(spark, CHAIN, root, rng, tables=BT, policy=POLICY)
-        group = f"compact-jobs-{chunks}"
-        sc.setJobGroup(group, "count compact jobs")
-        try:
-            res = compact(spark, root, "ETH", rng, tables=BT, chunk=10,
-                          block_json_schema=CHAIN.block_json_schema)
-        finally:
-            sc.setJobGroup(None, None)
-        jobs = tracker.getJobIdsForGroup(group)
-        tasks = [
-            sum(tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(j).stageIds)
-            for j in jobs
-        ]
+        res, tasks = _jobs_and_tasks(spark, f"compact-jobs-{chunks}", lambda: compact(
+            spark, root, "ETH", rng, tables=BT, chunk=10,
+            block_json_schema=CHAIN.block_json_schema))
         assert res.compacted_chunks == [(s, s + 9) for s in range(0, chunks * 10, 10)]
         assert len(tree(root)) == chunks * 2
-        return len(jobs), tasks
+        return len(tasks), tasks
 
     (jobs2, tasks2), (jobs20, tasks20) = run(2), run(20)
     assert jobs2 == jobs20 <= 3, f"2 chunks: {jobs2} jobs, 20 chunks: {jobs20} jobs"
     assert max(tasks2 + tasks20) <= sc.defaultParallelism, (tasks2, tasks20)
+
+
+def test_stream_batch_is_one_job(spark, tmp_path):
+    """A stream batch fetches and writes every kind of a height in the same
+    task: one Spark job whatever the height count, with at most the
+    tightest fetch cap of the requested kinds, and never more than
+    ``defaultParallelism``, tasks."""
+    sc = spark.sparkContext
+    policy = FetchPolicy()
+    caps = policy.thread_caps()
+    for n in (2, 40):
+        root, rng = str(tmp_path / f"h{n}"), Range(1_000, 999 + n)
+        res, tasks = _jobs_and_tasks(spark, f"stream-jobs-{n}", lambda: archive_single_blocks(
+            spark, CHAIN, root, rng, tables=BT, policy=policy, forks=True))
+        assert res.written == 2 * n and len(tree(root)) == 2 * n
+        assert len(tasks) == 1, f"{n} heights: {len(tasks)} jobs"
+        assert tasks[0] <= min(caps.blocks, caps.tx, sc.defaultParallelism), (n, tasks)
+    # --parallel 2 caps trace fetches at one (global.rs: api/4, at least 1)
+    root = str(tmp_path / "traces")
+    res, tasks = _jobs_and_tasks(spark, "stream-jobs-traces", lambda: archive_single_blocks(
+        spark, CHAIN, root, Range(1_000, 1_004), tables=(DataKind.BLOCKS, DataKind.TRACES),
+        policy=FetchPolicy(parallel=2)))
+    assert tasks == [1] and res.written == 10
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "avro"])
+def test_stream_singles_match_archive_ranges(spark, tmp_path, fmt):
+    """Stream singles hold the rows ``archive`` puts in its range files, for
+    every kind, up to ``archiveTimestamp``: uncle columns, a height whose
+    block lists no transactions (its txes and traces files are empty), and
+    txes tagged with the canonical block. A fork twin gets its own
+    hash-named blocks file, a rerun skips every file, and the provider's
+    block is fetched once per (height, variant)."""
+    from pyspark.accumulators import AccumulatorParam
+
+    from dshackle_archive_spark.sources.avro_io import read_archive_pdf
+
+    class Pairs(AccumulatorParam):
+        def zero(self, value):
+            return []
+
+        def addInPlace(self, a, b):
+            return a + b
+
+    calls = spark.sparkContext.accumulator([], Pairs())
+
+    class CountingChain(MockChain):  # executors unpickle it by value
+        def block(self, height, fork=False):
+            calls.add([(height, fork)])
+            return super().block(height, fork)
+
+        def block_json(self, height, fork=False):
+            return json.dumps(MockChain.block(self, height, fork)).encode()
+
+    # one tx on odd heights, none on even ones
+    args = dict(head_height=10_000, txs_per_block=0, fork_at=frozenset({203}),
+                uncle_at=frozenset({204, 205}))
+    chain, rng = CountingChain(**args), Range(200, 209)
+    tables = (DataKind.BLOCKS, DataKind.TRANSACTIONS, DataKind.TRACES)
+    singles, ranges = str(tmp_path / "singles"), str(tmp_path / "ranges")
+    res = archive_single_blocks(spark, chain, singles, rng, tables=tables, policy=POLICY,
+                                forks=True, fmt=fmt)
+    assert sorted(calls.value) == sorted([(h, False) for h in range(200, 210)] + [(203, True)])
+    archive(spark, MockChain(**args), ranges, rng, tables=tables, chunk=10, policy=POLICY,
+            fmt=fmt)
+
+    files = tree(singles)
+    assert len(files) == res.written == 31  # 11 blocks files, 10 txes, 10 traces
+    assert sorted(r["location"] for r in res.write_rows) == [
+        os.path.join(singles, "eth", p) for p in files]
+    twin = [p for p in files if chain.block_hash(203, fork=True) in p]
+    assert len(twin) == 1 and ".block." in twin[0]
+    sort = {DataKind.BLOCKS: ["height"], DataKind.TRANSACTIONS: ["height", "index"],
+            DataKind.TRACES: ["height", "index"]}
+    for kind, by in sort.items():
+        mine = [p for p in files if parse_filename(p).kind == kind and p not in twin]
+        assert len(mine) == 10
+
+        def rows(root, paths):
+            pdf = read_archive_pdf([os.path.join(root, "eth", p) for p in paths], kind.value)
+            return pdf.drop(columns=["archiveTimestamp"]).sort_values(by, ignore_index=True)
+
+        want = rows(ranges, [p for p in tree(ranges) if parse_filename(p).kind == kind])
+        assert len(want) == (10 if kind == DataKind.BLOCKS else 5)
+        pd.testing.assert_frame_equal(rows(singles, mine), want)
+    twin_row = read_archive_pdf([os.path.join(singles, "eth", twin[0])], "blocks")
+    assert twin_row["blockId"].tolist() == [chain.block_hash(203, fork=True)]
+
+    rerun = archive_single_blocks(spark, chain, singles, rng, tables=tables, policy=POLICY,
+                                  forks=True, fmt=fmt)
+    assert (rerun.written, rerun.skipped) == (0, 31) and tree(singles) == files
+    assert rerun.notifications.count() == 0 and res.notifications.count() == 31
 
 
 def test_compact_leaves_unresolved_fork_to_verify(spark, tmp_path):
