@@ -2,40 +2,42 @@
 ``src/archiver/archiver.rs:116-176``) — and the stream's single-block
 archive (``src/command/stream.rs``).
 
-``archive`` (SURVEY §3.1): the height domain for each chunk is a DataFrame,
-fetch stages are rate-capped ``mapInPandas`` fan-outs, writes are one file
-per (chunk, kind) via the layout sink, and each written file emits a
-notification row. Unlike the reference's sequential per-chunk loop, all
-chunks of a range land in ONE Spark job per kind — the chunk key is the
-shuffle/group key, so a 1000-executor cluster archives 1000 chunks at once.
+Both are built on one fetch-and-write kernel, ``UnitWriter``. A unit is a
+height range plus the kinds to write for it: the writer fetches each
+height's block once, builds the txes/traces rows from that block's hash, and
+writes every kind's file itself through ``ref_layout.write_file`` — a
+range file per kind advertising the unit's range (a transaction-less unit
+still gets its typed empty file), or, in single naming, one file per
+(height, kind).
+
+``archive`` (SURVEY §3.1) makes one unit per chunk, clipped to the request,
+and runs them all as ONE ``mapInPandas`` job with no shuffle
+(``fetch_write``, also ``fix``'s Spark phase), where the reference loops
+chunk by chunk. Within a unit a thread pool fetches the heights, so the
+in-flight calls of all tasks stay at the kind's cap (``global.rs:59-97``).
 
 ``archive_single_blocks`` writes one file per (height, kind): a stream
 batch of a few heights, where Spark job and task launches, not data, set
 the latency. It is ONE ``mapInPandas`` job with no shuffle over a local
-table listing each task's heights; a task fetches each of its heights'
-blocks (fork twin included) and txes/traces and writes every kind's file
-itself.
+table listing each task's heights; a task writes its heights one at a
+time, each as a one-height unit in single naming (fork twin included).
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import cached_property
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..core.filenames import DataKind, single_file_path
+from ..core.filenames import DataKind, range_file_path, single_file_path
 from ..core.ranges import Range
 from ..schemas import TABLE_SCHEMAS
 from ..sources import ref_layout
-from ..sources.fetcher import (
-    FetchPolicy,
-    block_row,
-    fetch_blocks,
-    fetch_table_for_heights,
-    tx_rows,
-)
+from ..sources.fetcher import FetchPolicy, height_rows
+from .runner import run_units
 
 ALL_TABLES = (DataKind.BLOCKS, DataKind.TRANSACTIONS, DataKind.TRACES)
 
@@ -70,6 +72,100 @@ def archive_result(spark: SparkSession, rows: list) -> ArchiveResult:
     )
 
 
+def _cap(policy: FetchPolicy, kinds) -> int:
+    """The tightest fetch cap of ``kinds`` (kind names)."""
+    caps = policy.thread_caps()
+    return min({"blocks": caps.blocks, "transactions": caps.tx, "traces": caps.trace}[k]
+               for k in kinds)
+
+
+@dataclass(frozen=True)
+class UnitWriter:
+    """Fetch and write one unit: ``writer(lo, hi, kinds)`` returns the
+    write-result row of every file it wrote or skipped.
+
+    ``single`` names one file per (height, kind) instead of one range file
+    per kind; ``forks`` then puts the block hash in the blocks files' names
+    and gives a fork height its twin's file (T5). ``threads`` > 1 fetches a
+    unit's heights on a pool of that many threads."""
+
+    provider: object
+    policy: FetchPolicy
+    base: str
+    run: str
+    overwrite: bool = False
+    maturity: str | None = None
+    fmt: str = "parquet"
+    compression: str = "zstd"
+    single: bool = False
+    forks: bool = False
+    threads: int = 1
+
+    def __call__(self, lo: int, hi: int, kinds) -> list[dict]:
+        heights = range(lo, hi + 1)
+
+        def fetch(h):
+            return height_rows(self.provider, h, kinds, self.policy, self.forks)
+
+        if self.threads > 1 and len(heights) > 1:
+            with ThreadPoolExecutor(min(self.threads, len(heights))) as pool:
+                fetched = list(pool.map(fetch, heights))
+        else:
+            fetched = [fetch(h) for h in heights]
+        out = []
+        for kind in kinds:
+            dk = DataKind(kind)
+            if not self.single:
+                rel = range_file_path(Range(lo, hi), dk, fmt=self.fmt)
+                out.append(self._write(rel, dk, [r for f in fetched for r in f[kind]], lo, hi))
+                continue
+            for h, f in zip(heights, fetched):
+                if dk == DataKind.BLOCKS:
+                    files = [([r], r["blockId"] if self.forks else None) for r in f[kind]]
+                else:
+                    files = [(f[kind], None)]
+                for rows, name_hash in files:
+                    rel = single_file_path(h, dk, block_hash=name_hash, fmt=self.fmt)
+                    out.append(self._write(rel, dk, rows, h, h))
+        return out
+
+    def _write(self, rel: str, kind: DataKind, rows: list, lo: int, hi: int) -> dict:
+        return ref_layout.write_file(
+            self.base, rel, kind, pd.DataFrame(rows, columns=TABLE_SCHEMAS[kind.value].names),
+            lo, hi, self.provider.blockchain_id, self.run, self.overwrite, self.maturity,
+            self.fmt, self.compression)
+
+
+def fetch_write(
+    spark: SparkSession,
+    provider,
+    root: str,
+    units: list,
+    policy: FetchPolicy,
+    run: str,
+    overwrite: bool = False,
+    fmt: str = "parquet",
+    compression: str = "zstd",
+) -> list:
+    """Fetch and write ``units`` (``[lo, hi, kind names]``, one range file
+    per kind advertising ``lo``..``hi``) in ONE Spark job with no shuffle;
+    returns the write-result rows.
+
+    The job runs ``min(cap, units, defaultParallelism)`` tasks, ``cap``
+    being the tightest fetch cap of the requested kinds, and each task
+    fetches a unit's heights on ``cap // tasks`` threads: the in-flight
+    calls stay at the cap, as under the reference's semaphores."""
+    cap = _cap(policy, {k for u in units for k in u[2]})
+    n = max(1, min(cap, len(units), spark.sparkContext.defaultParallelism))
+    writer = UnitWriter(provider, policy, ref_layout._join_path(root, provider.blockchain_id.lower()),
+                        run, overwrite=overwrite, fmt=fmt, compression=compression,
+                        threads=max(1, cap // n))
+    names = ref_layout.WRITE_RESULT_SCHEMA.names
+    return run_units(spark, units, n, lambda u: pd.DataFrame(writer(*u), columns=names),
+                     ref_layout.WRITE_RESULT_SCHEMA,
+                     weight=lambda u: (u[1] - u[0] + 1) * len(u[2]))
+
+
 def archive(
     spark: SparkSession,
     provider,
@@ -83,68 +179,15 @@ def archive(
     fmt: str = "parquet",
     compression: str = "zstd",
 ) -> ArchiveResult:
-    """Archive ``rng`` into reference-layout range files under ``root``.
+    """Archive ``rng`` into reference-layout range files under ``root``: one
+    file per (chunk, kind), each advertising its chunk clipped to ``rng``.
 
     ``fmt="avro"`` writes the reference's native Avro container format
     (schemas_avro) — byte-compatible with the reference tooling."""
-    results: DataFrame | None = None
-    for kind in tables:
-        if kind == DataKind.BLOCKS:
-            df = fetch_blocks(spark, provider, rng, policy)
-        else:
-            df = fetch_table_for_heights(spark, provider, rng, kind.value, policy)
-        wr = ref_layout.write_range_files(
-            df,
-            root,
-            provider.blockchain_id,
-            kind,
-            chunk=chunk,
-            run=run,
-            overwrite=overwrite,
-            requested=rng,
-            fmt=fmt,
-            compression=compression,
-        )
-        results = wr if results is None else results.unionByName(wr)
-    # materialize the write action once, keep the summary driver-side
-    return archive_result(spark, results.collect())
-
-
-def _archive_heights(
-    provider,
-    heights: list[int],
-    tables: tuple[DataKind, ...],
-    policy: FetchPolicy,
-    forks: bool,
-    base: str,
-    run: str,
-    maturity: str | None,
-    fmt: str,
-    compression: str,
-) -> pd.DataFrame:
-    """Fetch and write every requested kind of each height, one file per
-    (height, kind); with ``forks`` the blocks files carry the block hash and
-    a fork height gets its twin's file too (T5). Txes/traces are tagged
-    with the canonical block fetched here. One write-result row per file."""
-    out = []
-    for h in heights:
-        variants = [False, True] if forks and h in provider.fork_at else [False]
-        blocks = ([block_row(provider, h, policy, fork) for fork in variants]
-                  if DataKind.BLOCKS in tables else [])
-        if any(kind != DataKind.BLOCKS for kind in tables):
-            block_hash = blocks[0]["blockId"] if blocks else policy.call(provider.block, h)["hash"]
-        for kind in tables:
-            if kind == DataKind.BLOCKS:
-                files = [([row], row["blockId"] if forks else None) for row in blocks]
-            else:
-                files = [(tx_rows(provider, h, block_hash, kind == DataKind.TRACES, policy),
-                          None)]
-            for rows, name_hash in files:
-                out.append(ref_layout.write_file(
-                    base, single_file_path(h, kind, block_hash=name_hash, fmt=fmt), kind,
-                    pd.DataFrame(rows, columns=TABLE_SCHEMAS[kind.value].names), h, h,
-                    provider.blockchain_id, run, False, maturity, fmt, compression))
-    return pd.DataFrame(out, columns=ref_layout.WRITE_RESULT_SCHEMA.names)
+    kinds = [k.value for k in tables]
+    units = [[p.start, p.end, kinds] for p in rng.split_chunks(chunk)]
+    return archive_result(spark, fetch_write(spark, provider, root, units, policy, run,
+                                             overwrite, fmt, compression))
 
 
 def archive_single_blocks(
@@ -167,19 +210,20 @@ def archive_single_blocks(
     the requested kinds, bounded by the height count and
     ``defaultParallelism``. The height table is built from a pandas frame,
     so it reaches the JVM as an Arrow local table with one row per task."""
-    caps = policy.thread_caps()
-    cap = min({DataKind.BLOCKS: caps.blocks, DataKind.TRANSACTIONS: caps.tx,
-               DataKind.TRACES: caps.trace}[k] for k in tables)
+    kinds = [k.value for k in tables]
     heights = list(range(rng.start, rng.end + 1))
-    n = max(1, min(cap, len(heights), spark.sparkContext.defaultParallelism))
+    n = max(1, min(_cap(policy, kinds), len(heights), spark.sparkContext.defaultParallelism))
     table = pd.DataFrame({"heights": [",".join(map(str, heights[i::n])) for i in range(n)]})
-    base = ref_layout._join_path(root, provider.blockchain_id.lower())
+    writer = UnitWriter(provider, policy, ref_layout._join_path(root, provider.blockchain_id.lower()),
+                        run, maturity=maturity, fmt=fmt, compression=compression, single=True,
+                        forks=forks)
+    names = ref_layout.WRITE_RESULT_SCHEMA.names
 
     def archive_task(batches):
         for pdf in batches:
             for hs in pdf["heights"]:
-                yield _archive_heights(provider, [int(h) for h in hs.split(",")], tables,
-                                       policy, forks, base, run, maturity, fmt, compression)
+                yield pd.DataFrame([r for h in map(int, hs.split(","))
+                                    for r in writer(h, h, kinds)], columns=names)
 
     rows = (
         spark.createDataFrame(table, "heights string")

@@ -24,8 +24,8 @@ A passing chunk gets a per-kind source list; a kind already held in its
 exact-range file is kept as is (read for the reconciliation only, never
 rewritten or deleted).
 
-Spark phase — ONE ``mapInPandas`` job over a local table with one row per
-passing chunk. A task takes its chunks one at a time: it reads the chunk's
+Spark phase — ONE ``mapInPandas`` job (``runner.run_units``) over the
+passing chunks. A task takes its chunks one at a time: it reads the chunk's
 files, reconciles them (A5/A7: the block heights are one island equal to
 the chunk, one row each; J6: txids promised by the blocks == txids copied)
 and only then writes each rewritten kind's range file (tmp+rename). A chunk
@@ -47,6 +47,7 @@ from pyspark.sql import types as T
 from ..core.filenames import DataKind, range_file_path
 from ..core.ranges import Range, merge_ranges
 from ..sources.archive import delete_files, inventory_rows
+from .runner import run_units
 
 
 @dataclass
@@ -189,29 +190,13 @@ def _rewrite_chunk(base: str, c_start: int, c_end: int, plan: ChunkPlan, fmt: st
 
 def _rewrite(spark: SparkSession, base: str, passing: dict[tuple[int, int], ChunkPlan],
              fmt: str, compression: str, tx_field: str | None) -> list:
-    """The fused rewrite: one job, one result row per (chunk, kind).
-
-    The chunk table is built from a pandas frame, so it reaches the JVM as
-    an Arrow local table: no Python pass and no listing job in front of the
-    rewrite, and at most ``defaultParallelism`` tasks."""
-    import pandas as pd
-
-    from ..session import ship_package
-
-    ship_package(spark)
-    table = pd.DataFrame(
-        [(s, e, json.dumps(plan)) for (s, e), plan in sorted(passing.items())],
-        columns=["c_start", "c_end", "plan"],
-    )
-
-    def rewrite(batches):
-        for pdf in batches:
-            for s, e, plan in zip(pdf["c_start"], pdf["c_end"], pdf["plan"]):
-                yield _rewrite_chunk(base, int(s), int(e), json.loads(plan), fmt,
-                                     compression, tx_field)
-
-    chunks_df = spark.createDataFrame(table, "c_start long, c_end long, plan string")
-    return chunks_df.mapInPandas(rewrite, schema=REWRITE_SCHEMA).collect()
+    """The fused rewrite: one job of at most ``defaultParallelism`` tasks,
+    one result row per (chunk, kind)."""
+    return run_units(
+        spark, [[s, e, plan] for (s, e), plan in sorted(passing.items())],
+        spark.sparkContext.defaultParallelism,
+        lambda u: _rewrite_chunk(base, u[0], u[1], u[2], fmt, compression, tx_field),
+        REWRITE_SCHEMA)
 
 
 def compact(

@@ -5,13 +5,15 @@ The gap work list is computed on the driver with no Spark job: per kind,
 the requested range minus every listed file's range
 (``core.groups.missing_ranges`` over ``sources.archive.inventory_rows``,
 i.e. ``core.ranges.subtract_ranges``; the inventory is one row per file,
-metadata-scale). All missing ranges of one kind are then re-archived in ONE
-fetch+write job (``overwrite=False`` so racing writers keep existing files,
-S13), narrowed to only the missing kinds (``only_include``, P6), and the
-writes of every kind run under one collect. The reference loops gap by gap
-— fine for its in-process writes, but a fragmented archive (thousands of
-small gaps) would serialize thousands of ~100 ms Spark job launches; here
-the gap list is the partition domain of a single job per kind.
+metadata-scale). Each kind's gaps are cut at absolute chunk boundaries into
+file pieces, and every piece becomes one unit carrying the kinds missing
+over exactly that piece (``only_include``, P6). All units are then fetched
+and written in ONE Spark job with no shuffle (``archive_plan.fetch_write``,
+``overwrite=False`` so racing writers keep existing files, S13): a task
+fetches each height of a piece once and writes every missing kind's file.
+The reference loops gap by gap — fine for its in-process writes, but a
+fragmented archive (thousands of small gaps) would serialize thousands of
+~100 ms Spark job launches.
 """
 
 from __future__ import annotations
@@ -23,10 +25,9 @@ from pyspark.sql import SparkSession
 from ..core.filenames import DataKind
 from ..core.groups import missing_ranges
 from ..core.ranges import Range, merge_ranges
-from ..sources import ref_layout
 from ..sources.archive import inventory_rows
-from ..sources.fetcher import FetchPolicy, fetch_blocks, fetch_table_for_heights
-from .archive_plan import ArchiveResult, archive_result
+from ..sources.fetcher import FetchPolicy
+from .archive_plan import ArchiveResult, archive_result, fetch_write
 
 
 @dataclass
@@ -55,37 +56,22 @@ def fix(
     )
     work = sorted(missing, key=lambda t: (t[1], t[0]))
     results: list[ArchiveResult] = []
-    if not dry_run:
+    if not dry_run and work:
         by_kind: dict[str, list[Range]] = {}
         for kind, lo, hi in work:
             by_kind.setdefault(kind, []).append(Range(lo, hi))
-        writes = None
+        # file pieces: gaps cut at absolute chunk boundaries, so restored
+        # files carry exactly the reference's names for those gaps
+        pieces: dict[tuple[int, int], list[str]] = {}
         for kind, ranges in by_kind.items():
-            merged = merge_ranges(ranges)
-            # file pieces: gaps cut at absolute chunk boundaries, so restored
-            # files carry exactly the reference's names for those gaps
-            pieces = [p for r in merged for p in r.split_chunks(chunk, aligned=False)]
-            dk = DataKind(kind)
-            if dk == DataKind.BLOCKS:
-                df = fetch_blocks(spark, provider, merged, policy)
-            else:
-                df = fetch_table_for_heights(spark, provider, merged, dk.value, policy)
-            wr = ref_layout.write_piece_files(
-                df,
-                root,
-                provider.blockchain_id,
-                dk,
-                pieces,
-                run="fix",
-                overwrite=False,
-                fmt=fmt,
-                compression=compression,
-            )
-            writes = wr if writes is None else writes.unionByName(wr)
-        # every kind's fetch+write runs in the one collect
-        all_rows = writes.collect() if writes is not None else []
+            for r in merge_ranges(ranges):
+                for p in r.split_chunks(chunk):
+                    pieces.setdefault((p.start, p.end), []).append(kind)
+        rows = fetch_write(spark, provider, root,
+                           [[lo, hi, ks] for (lo, hi), ks in sorted(pieces.items())],
+                           policy, run="fix", fmt=fmt, compression=compression)
         for kind in by_kind:
-            results.append(archive_result(spark, [r for r in all_rows if r["type"] == kind]))
+            results.append(archive_result(spark, [r for r in rows if r["type"] == kind]))
     out = FixResult(missing=work, archived=results)
     if snapshot and not dry_run:
         # add-only manifest commit: the repaired files join the archive in

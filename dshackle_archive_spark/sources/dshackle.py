@@ -280,9 +280,10 @@ class DshackleClient:
 
     Mirrors the reference's envelope: bounded in-flight calls
     (``Semaphore(threads.api)``), a 10 s deadline per call, gzip message
-    compression, and one kept-alive connection per client (reopened
-    transparently after a drop). Picklable into Spark workers — the live
-    socket is shed on pickle and lazily reopened.
+    compression, and one kept-alive connection per client and calling
+    thread (reopened transparently after a drop), so a fetch task's pool
+    threads never interleave streams on one socket. Picklable into Spark
+    workers — the live sockets are shed on pickle and lazily reopened.
     """
 
     def __init__(
@@ -324,9 +325,8 @@ class DshackleClient:
         self._parallel = parallel
         self._sem = threading.Semaphore(parallel)
         self._id = 0
-        self._sock: socket.socket | None = None
-        self._file: io.BufferedRWPair | None = None
-        self._h2 = None
+        # this thread's connection: .sock, .file (its buffered pair), .h2
+        self._local = threading.local()
         # optional (observer, blockchain_id) — reference observe_request
         # (connection.rs:66); registry observers are driver-only (shed on
         # pickle), SparkRequestRecorder (worker_safe) rides into tasks
@@ -334,9 +334,7 @@ class DshackleClient:
 
     def __getstate__(self):
         state = self.__dict__.copy()
-        state["_sock"] = None
-        state["_file"] = None
-        state["_h2"] = None
+        del state["_local"]
         state["_sem"] = None
         m = state.get("metrics")
         if m is not None and not getattr(m[0], "worker_safe", False):
@@ -346,14 +344,20 @@ class DshackleClient:
     def __setstate__(self, state):
         self.__dict__.update(state)
         self._sem = threading.Semaphore(self._parallel)
+        self._local = threading.local()
 
     # -- connection management ----------------------------------------------
     def _connect(self):
-        """One kept-alive HTTP/2 connection; sequential gRPC streams on it."""
+        """This thread's kept-alive HTTP/2 connection; sequential gRPC
+        streams on it."""
         from .h2 import H2ClientConnection
 
-        if self._sock is None:
+        loc = self._local
+        if getattr(loc, "h2", None) is None:
             s = socket.create_connection((self.host, self.port), timeout=self.timeout_s)
+            # a call is several small frames, each flushed on its own: with
+            # Nagle's algorithm on, each waits for the peer's delayed ACK
+            s.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
             if self.tls:
                 # gRPC requires ALPN-negotiated h2 on TLS connections
                 import ssl
@@ -369,21 +373,21 @@ class DshackleClient:
                     raise DshackleError(
                         "TLS peer did not negotiate h2 via ALPN"
                     )
-            self._sock = s
-            self._file = s.makefile("rwb")
-            self._h2 = H2ClientConnection(self._file)
-        return self._h2
+            loc.sock = s
+            loc.file = s.makefile("rwb")
+            loc.h2 = H2ClientConnection(loc.file)
+        return loc.h2
 
     def close(self) -> None:
-        if self._sock is not None:
+        """Close the calling thread's connection."""
+        loc = self._local
+        if getattr(loc, "h2", None) is not None:
             try:
-                self._file.close()
-                self._sock.close()
+                loc.file.close()
+                loc.sock.close()
             except OSError:
                 pass
-            self._sock = None
-            self._file = None
-            self._h2 = None
+            loc.sock = loc.file = loc.h2 = None
 
     def _open_stream(self, path: str, request: bytes) -> tuple[object, int]:
         """New gRPC stream: HPACK'd request HEADERS + the request message as

@@ -1,17 +1,22 @@
-"""Partition-parallel chain fetch stage (S6-S8 in SURVEY §2.1).
+"""Per-height chain fetch (S6-S8 in SURVEY §2.1).
 
 The reference fans out per-height RPC calls under semaphore caps
 (``global.rs:59-97``: api=16, blocks=api/2, tx=api/2, trace=api/4) with
 10 s timeouts and exponential-backoff retries (``ethereum.rs:27-30,
-104-202``). In Spark the fan-out is task parallelism: the height domain is
-repartitioned to the rate cap, and each task runs a bounded fetch loop.
-Rows are built in Arrow batches via ``mapInPandas`` — the fetch is the only
-Python-side stage in the engine; everything downstream is Catalyst-native.
+104-202``). ``height_rows`` fetches every requested kind of one height from
+a single fetch of its block; the workflows' fetch-and-write tasks
+(``plans.archive_plan.UnitWriter``) call it per height, on a thread pool
+sized so the in-flight calls of all tasks stay at the kind's cap, and
+write the rows straight into their files.
 
 With the mock provider the "RPC" is a pure function; the real-chain path
 plugs an HTTP/gRPC client into the same ``FetchPolicy`` loop, which is where
 the retry/backoff/timeout logic lives (Spark task retries are too coarse —
 SURVEY §4).
+
+``heights_df``, ``fetch_blocks`` and ``fetch_table_for_heights`` are the
+older DataFrame form (one ``mapInPandas`` stage per kind); no workflow runs
+them, only the per-layer benchmark timings and tests.
 """
 
 from __future__ import annotations
@@ -166,7 +171,8 @@ def _now_utc() -> datetime:
 def heights_df(
     spark: SparkSession, rng: "Range | list[Range]", parallel: int
 ) -> DataFrame:
-    """The height domain as a DataFrame, pre-partitioned to the rate cap.
+    """The height domain as a DataFrame, pre-partitioned to the rate cap
+    (benchmark/test only: feeds ``fetch_blocks``/``fetch_table_for_heights``).
 
     Accepts one range (dense ``spark.range``, no shuffle) or several disjoint
     ranges (the fix plan's gap list — unioned then round-robined so every
@@ -213,7 +219,8 @@ def fetch_blocks(
     rng: Range,
     policy: FetchPolicy = FetchPolicy(),
 ) -> DataFrame:
-    """Fetch the blocks table for a height range (reference block.rs:20-94)."""
+    """Fetch the blocks table for a height range (reference block.rs:20-94).
+    Benchmark/test only: the workflows fetch through ``height_rows``."""
     cap = policy.thread_caps().blocks  # blocks cap (global.rs:78-97)
     cols = [f.name for f in BLOCKS_SCHEMA.fields]
 
@@ -296,7 +303,9 @@ def fetch_table_for_heights(
     policy: FetchPolicy = FetchPolicy(),
 ) -> DataFrame:
     """Fetch txes/traces for a range (reference table.rs:17-150): per-height
-    fan-out at the kind's rate cap, one row per (block, tx-index)."""
+    fan-out at the kind's rate cap, one row per (block, tx-index).
+    Benchmark/test only: it fetches each height's block again per kind,
+    where the workflows' ``height_rows`` fetches it once for all kinds."""
     with_traces = kind == "traces"
     caps = policy.thread_caps()
     cap = caps.trace if with_traces else caps.tx
@@ -313,3 +322,24 @@ def fetch_table_for_heights(
 
     hs = heights_df(spark, rng, cap)
     return hs.mapInPandas(gen, schema=schema)
+
+
+def height_rows(
+    provider, h: int, kinds, policy: FetchPolicy, forks: bool = False
+) -> dict:
+    """The rows of height ``h`` for each kind name in ``kinds``,
+    ``{kind name: rows}``, from ONE fetch of its block: the txes/traces
+    rows are tagged with the hash of the canonical block fetched here. With
+    ``forks`` a height in the provider's ``fork_at`` also gets its fork
+    twin's blocks row, after the canonical one (T5)."""
+    out = {}
+    if "blocks" in kinds:
+        variants = [False, True] if forks and h in provider.fork_at else [False]
+        out["blocks"] = [block_row(provider, h, policy, fork) for fork in variants]
+    tx_kinds = [k for k in kinds if k != "blocks"]
+    if tx_kinds:
+        block_hash = (out["blocks"][0]["blockId"] if "blocks" in out
+                      else policy.call(provider.block, h)["hash"])
+        for k in tx_kinds:
+            out[k] = tx_rows(provider, h, block_hash, k == "traces", policy)
+    return out

@@ -1,19 +1,25 @@
 """Reference-layout file sink: one file per (range|height, kind), written
-distributed (S11-S13 in SURVEY §2.1).
+by the task that holds its rows (S11-S13 in SURVEY §2.1).
 
 The reference appends records into exactly-named Avro files
 (``fs.rs:135-219``); Spark's native ``df.write`` produces opaque part-files,
-so the layout-compatible sink groups rows by their target file and lets each
-*task* write its file via pyarrow inside ``applyInPandas`` — no driver
-collect, one task per output file, horizontally scalable to any number of
-files. Parquet is used in this environment (no spark-avro jar); the path
-codec accepts both extensions.
+so each file is serialized with pyarrow (parquet) or the Avro container
+codec and committed whole by the task that fetched or read its rows
+(``write_file``): the workflows' fetch-and-write units
+(``plans.archive_plan.UnitWriter``) and ``compact``'s rewrite call it
+directly, so no driver collect or shuffle stands between the rows and
+their file.
 
 Idempotent writes (S13, ``create(overwrite=false)``): a task that finds its
 target file already present skips it and reports ``skipped`` — the
 reference's keep-existing semantics for stream/fix.
 
 Each written file yields one notification row (S15, ``notify/mod.rs:12-35``).
+
+``write_range_files``, ``write_piece_files`` and ``write_single_files``
+(over ``_write_group_fn``) are the older DataFrame form: a shuffle on the
+target file, then one ``applyInPandas`` group per file. No workflow runs
+them, only the per-layer benchmark timings and tests.
 """
 
 from __future__ import annotations
@@ -264,6 +270,8 @@ def _write_group_fn(
     requested: tuple[int, int] | None = None,
     compression: str = "zstd",
 ):
+    """The ``applyInPandas`` writer of the DataFrame sinks below
+    (benchmark/test only)."""
     from ..schemas import TABLE_SCHEMAS
 
     int_cols = {
@@ -330,7 +338,8 @@ def write_range_files(
     requested: "Range | None" = None,
     compression: str = "zstd",
 ) -> DataFrame:
-    """Write ``df`` as reference-layout range files, one per aligned chunk.
+    """Write ``df`` as reference-layout range files, one per aligned chunk
+    (benchmark/test only; ``archive`` writes through ``UnitWriter``).
 
     ``requested`` bounds the advertised coverage of edge chunks (unaligned
     splits / fix sub-ranges), and every chunk it touches emits a file even
@@ -372,7 +381,8 @@ def write_piece_files(
     fmt: str = "parquet",
     compression: str = "zstd",
 ) -> DataFrame:
-    """Write one range file per explicit ``(start, end)`` piece.
+    """Write one range file per explicit ``(start, end)`` piece
+    (benchmark/test only; ``fix`` writes through ``UnitWriter``).
 
     The fix work list's gap shapes are arbitrary sub-chunk ranges — possibly
     several inside one chunk — so the piece itself is the group key. ALL
@@ -424,9 +434,10 @@ def write_single_files(
 ) -> DataFrame:
     """Write one file per (height[, blockId]) of ``df``'s rows — stream
     mode's fork-tolerant single-block files (T5: the hash qualifier keeps
-    both fork versions). ``archive_plan.archive_single_blocks`` writes the
-    same files from its fused fetch task; this DataFrame form only feeds
-    the per-layer benchmark timings and the object-store tests."""
+    both fork versions). Benchmark/test only:
+    ``archive_plan.archive_single_blocks`` writes the same files from its
+    fused fetch task; this DataFrame form only feeds the per-layer
+    benchmark timings and the object-store tests."""
     base = _join_path(root, blockchain.lower())
     keys = ["height", "blockId"] if hash_in_name else ["height"]
     grouped = df.withColumn("_file_group", F.concat_ws("_", *[F.col(k) for k in keys]))

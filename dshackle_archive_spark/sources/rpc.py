@@ -19,16 +19,19 @@ value's span out of the raw HTTP body (the reference archives the node's
 result bytes unmodified, ``avros.rs:54-57``), so archives are byte-identical
 to reference archives regardless of how the node formats its JSON.
 
-Transport: one keep-alive ``http.client.HTTPConnection`` per client (the
-reference holds a pooled channel per provider); a stale/dropped connection
-is transparently reopened once per call. Clients are picklable into Spark
-workers — the live socket is dropped on pickle and lazily reopened.
+Transport: one keep-alive ``http.client.HTTPConnection`` per client and
+calling thread (the reference holds a pooled channel per provider), so a
+fetch task's pool threads never interleave requests on one socket; a
+stale/dropped connection is transparently reopened once per call. Clients
+are picklable into Spark workers — the live sockets are dropped on pickle
+and lazily reopened.
 """
 
 from __future__ import annotations
 
 import http.client
 import json
+import threading
 import time
 import urllib.parse
 from typing import Any
@@ -77,13 +80,14 @@ class JsonRpcError(RuntimeError):
 
 
 class JsonRpcClient:
-    """JSON-RPC 2.0 over a keep-alive HTTP connection (stdlib; picklable)."""
+    """JSON-RPC 2.0 over keep-alive HTTP connections, one per calling thread
+    (stdlib; picklable)."""
 
     def __init__(self, url: str, timeout_s: float = 10.0):
         self.url = url
         self.timeout_s = timeout_s
         self._id = 0
-        self._conn: http.client.HTTPConnection | None = None
+        self._local = threading.local()  # .conn: this thread's connection
         # optional (observer, blockchain_id): per-request timing into the
         # Prometheus surface (reference observe_request, connection.rs:66).
         # A MetricsRegistry observer is driver-only (holds locks, shed on
@@ -94,11 +98,15 @@ class JsonRpcClient:
     # live sockets don't pickle — drop on serialize, reopen lazily on use
     def __getstate__(self):
         state = self.__dict__.copy()
-        state["_conn"] = None
+        del state["_local"]
         m = state.get("metrics")
         if m is not None and not getattr(m[0], "worker_safe", False):
             state["metrics"] = None
         return state
+
+    def __setstate__(self, state):
+        self.__dict__.update(state)
+        self._local = threading.local()
 
     def _observe(self, method: str, t0: float) -> None:
         if self.metrics is not None:
@@ -106,20 +114,23 @@ class JsonRpcClient:
             registry.observe_request(method, chain, time.perf_counter() - t0)
 
     def _connect(self) -> http.client.HTTPConnection:
-        if self._conn is None:
+        conn = getattr(self._local, "conn", None)
+        if conn is None:
             u = urllib.parse.urlsplit(self.url)
             cls = (
                 http.client.HTTPSConnection
                 if u.scheme == "https"
                 else http.client.HTTPConnection
             )
-            self._conn = cls(u.hostname, u.port, timeout=self.timeout_s)
-        return self._conn
+            conn = self._local.conn = cls(u.hostname, u.port, timeout=self.timeout_s)
+        return conn
 
     def close(self) -> None:
-        if self._conn is not None:
-            self._conn.close()
-            self._conn = None
+        """Close the calling thread's connection."""
+        conn = getattr(self._local, "conn", None)
+        if conn is not None:
+            conn.close()
+            self._local.conn = None
 
     def _post_once(self, body: bytes) -> bytes:
         conn = self._connect()

@@ -52,6 +52,9 @@ def start_dshackle_stub(
         ssl_ctx.set_alpn_protocols(["h2"])
 
     class Handler(socketserver.StreamRequestHandler):
+        # each frame is flushed on its own: no Nagle wait between them
+        disable_nagle_algorithm = True
+
         def handle(self):
             srv.accepts += 1
             try:

@@ -170,6 +170,9 @@ def start_stub(
 
     class Handler(BaseHTTPRequestHandler):
         protocol_version = "HTTP/1.1"  # keep-alive
+        # headers and body go out in two writes; with Nagle's algorithm on,
+        # the body waits ~40 ms for the client's delayed ACK
+        disable_nagle_algorithm = True
 
         def setup(self):
             srv.accepts += 1  # one Handler per TCP connection

@@ -684,28 +684,232 @@ def test_compact_reconciliation_failure_skips_chunk(spark, tmp_path, ext, edit):
 
 def test_fix_batches_gaps_into_one_job_per_kind(spark, tmp_path):
     """A fragmented archive (10 gaps) is re-archived in one fetch+write job
-    per kind — not one archive() per gap (fix.rs loops; job launches must
-    not: a 10-gap fix at ~2 jobs/gap would issue 20+)."""
+    — not one archive() per gap (fix.rs loops; job launches must not: a
+    10-gap fix at ~2 jobs/gap would issue 20+)."""
     archive(spark, CHAIN, str(tmp_path), Range(0, 999), tables=BT, chunk=50, policy=POLICY)
     victims = [
         f"000000000/range-{s:09d}_{s + 49:09d}.txes.parquet" for s in range(0, 1000, 100)
     ]
     delete_files(str(tmp_path / "eth"), victims)
-    sc = spark.sparkContext
-    sc.setJobGroup("fix-jobs", "count fix jobs")
-    try:
-        res = fix(spark, CHAIN, str(tmp_path), Range(0, 999), tables=BT, chunk=50,
-                  policy=POLICY)
-    finally:
-        sc.setJobGroup(None, None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup("fix-jobs"))
+    res, tasks = _jobs_and_tasks(spark, "fix-jobs", lambda: fix(
+        spark, CHAIN, str(tmp_path), Range(0, 999), tables=BT, chunk=50, policy=POLICY))
     assert [(k, s, e) for k, s, e in res.missing] == [
         ("transactions", s, s + 49) for s in range(0, 1000, 100)
     ]
     assert len(tree(tmp_path)) == 40  # all 10 gap files restored
-    assert jobs < 10, f"fix issued {jobs} jobs for 10 gaps"
+    assert len(tasks) == 1, f"fix issued {len(tasks)} jobs for 10 gaps"
     rep = verify(spark, CHAIN, str(tmp_path), Range(0, 999), tables=BT)
     assert rep.failures == []
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "avro"])
+def test_archive_and_fix_are_one_job(spark, tmp_path, fmt):
+    """archive and fix fetch and write every unit (a chunk, a gap piece) in
+    one Spark job with no shuffle, at 1 unit as at 20, and run at most
+    ``min(cap, units, defaultParallelism)`` tasks."""
+    sc = spark.sparkContext
+    policy = FetchPolicy()
+    caps = policy.thread_caps()
+    for units in (1, 20):
+        root, rng = str(tmp_path / f"u{units}"), Range(0, units * 10 - 1)
+        bound = min(caps.blocks, caps.tx, units, sc.defaultParallelism)
+        res, tasks = _jobs_and_tasks(spark, f"archive-{fmt}-{units}", lambda: archive(
+            spark, CHAIN, root, rng, tables=BT, chunk=10, policy=policy, fmt=fmt))
+        files = tree(root)
+        assert res.written == len(files) == 2 * units
+        assert len(tasks) == 1 and tasks[0] <= bound, (units, tasks)
+        # every txes file and every other blocks file: one unit per chunk
+        victims = [p for i, p in enumerate(files) if ".txes." in p or i % 4 == 0]
+        delete_files(os.path.join(root, "eth"), victims)
+        res, tasks = _jobs_and_tasks(spark, f"fix-{fmt}-{units}", lambda: fix(
+            spark, CHAIN, root, rng, tables=BT, chunk=10, policy=policy, fmt=fmt))
+        assert sum(r.written for r in res.archived) == len(victims)
+        assert len(tasks) == 1 and tasks[0] <= bound, (units, tasks)
+        assert tree(root) == files
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "avro"])
+def test_units_match_dataframe_path(spark, tmp_path, fmt):
+    """``archive`` and ``fix`` write the files the DataFrame path
+    (``fetch_*`` + ``write_range_files``/``write_piece_files``) writes: same
+    names, tables equal up to ``archiveTimestamp`` (uncle columns, a
+    transaction-less height's missing rows, a chunk with no transactions
+    at all), edge files advertise only the requested heights, a rerun skips
+    every file, and the provider's block is fetched once per height for
+    all three kinds."""
+    import shutil
+
+    from pyspark.accumulators import AccumulatorParam
+
+    from dshackle_archive_spark.sources import ref_layout
+    from dshackle_archive_spark.sources.avro_io import read_archive_pdf
+    from dshackle_archive_spark.sources.fetcher import fetch_blocks, fetch_table_for_heights
+
+    class Heights(AccumulatorParam):
+        def zero(self, value):
+            return []
+
+        def addInPlace(self, a, b):
+            return a + b
+
+    calls = spark.sparkContext.accumulator([], Heights())
+
+    class CountingChain(MockChain):  # executors unpickle it by value
+        def block(self, height, fork=False):
+            calls.add([height])
+            return super().block(height, fork)
+
+        def block_json(self, height, fork=False):
+            return json.dumps(MockChain.block(self, height, fork)).encode()
+
+    # one tx on odd heights, none on even ones; 220..220 has no tx at all
+    args = dict(head_height=10_000, txs_per_block=0, uncle_at=frozenset({196, 205}))
+    chain, plain = CountingChain(**args), MockChain(**args)
+    tables = (DataKind.BLOCKS, DataKind.TRANSACTIONS, DataKind.TRACES)
+    new, old = str(tmp_path / "new"), str(tmp_path / "old")
+    rng = Range(195, 220)  # unaligned at both ends: 195..199, 200..219, 220..220
+
+    def rows(root, rel):
+        kind = parse_filename(rel).kind
+        by = ["height"] if kind == DataKind.BLOCKS else ["height", "index"]
+        pdf = read_archive_pdf([os.path.join(root, "eth", rel)], kind.value)
+        return pdf.drop(columns=["archiveTimestamp"]).sort_values(by, ignore_index=True)
+
+    def same_trees():
+        files = tree(new)
+        assert tree(old) == files
+        for rel in files:
+            pd.testing.assert_frame_equal(rows(new, rel), rows(old, rel))
+        return files
+
+    def fetch(kind, ranges):
+        if kind == DataKind.BLOCKS:
+            return fetch_blocks(spark, plain, ranges, POLICY)
+        return fetch_table_for_heights(spark, plain, ranges, kind.value, POLICY)
+
+    res = archive(spark, chain, new, rng, tables=tables, chunk=20, policy=POLICY, fmt=fmt)
+    assert sorted(calls.value) == list(range(195, 221))
+    for kind in tables:
+        ref_layout.write_range_files(fetch(kind, rng), old, "ETH", kind, chunk=20,
+                                     requested=rng, fmt=fmt).collect()
+    files = same_trees()
+    assert len(files) == res.written == 9
+    assert sorted({(r["heightStart"], r["heightEnd"]) for r in res.write_rows}) == [
+        (195, 199), (200, 219), (220, 220)]
+    rerun = archive(spark, chain, new, rng, tables=tables, chunk=20, policy=POLICY, fmt=fmt)
+    assert (rerun.written, rerun.skipped) == (0, 9)
+
+    # fix: 200..219 lost every kind, 195..199 only its txes
+    ext = f".{fmt}"
+    lost = [f"000000000/range-000000200_000000219.{k.range_ext}{ext}" for k in tables]
+    lost.append(f"000000000/range-000000195_000000199.txes{ext}")
+    shutil.rmtree(old)
+    shutil.copytree(new, old)
+    for root in (new, old):
+        delete_files(os.path.join(root, "eth"), lost)
+    calls.value = []  # driver-side reset
+    res = fix(spark, chain, new, rng, tables=tables, chunk=20, policy=POLICY, fmt=fmt)
+    assert sorted(calls.value) == list(range(195, 220))
+    assert sorted(res.missing) == [("blocks", 200, 219), ("traces", 200, 219),
+                                   ("transactions", 195, 219)]
+    for kind in tables:
+        missing = [Range(s, e) for k, s, e in res.missing if k == kind.value]
+        pieces = [p for r in missing for p in r.split_chunks(20)]
+        ref_layout.write_piece_files(fetch(kind, missing[0] if len(missing) == 1 else missing),
+                                     old, "ETH", kind, pieces, fmt=fmt).collect()
+    assert same_trees() == files
+    assert sorted((r["type"], r["heightStart"], r["heightEnd"])
+                  for a in res.archived for r in a.write_rows) == sorted(
+        [(k.value, 200, 219) for k in tables] + [("transactions", 195, 199)])
+    again = fix(spark, chain, new, rng, tables=tables, chunk=20, policy=POLICY, fmt=fmt)
+    assert again.missing == [] and again.archived == []
+
+
+def test_unit_fetch_honours_the_cap(spark, tmp_path):
+    """A one-unit archive fetches its heights on ``cap`` threads: at blocks
+    cap 4 its fetch (first call to last) takes at most half its serial
+    wall, the sum of its calls' walls, and never has more than 4 provider
+    calls in flight."""
+    import time
+
+    from pyspark.accumulators import AccumulatorParam
+
+    from dshackle_archive_spark.sources.fetcher import ThreadsConfig
+
+    class Spans(AccumulatorParam):
+        def zero(self, value):
+            return []
+
+        def addInPlace(self, a, b):
+            return a + b
+
+    spans = spark.sparkContext.accumulator([], Spans())
+
+    class SlowChain(MockChain):  # executors unpickle it by value
+        def _slow(self, fn, *args):
+            t0 = time.monotonic()
+            time.sleep(0.02)
+            out = fn(self, *args)
+            spans.add([(t0, time.monotonic())])
+            return out
+
+        def block(self, height, fork=False):
+            return self._slow(MockChain.block, height, fork)
+
+        def block_json(self, height, fork=False):
+            return self._slow(lambda c, h, f: json.dumps(MockChain.block(c, h, f)).encode(),
+                              height, fork)
+
+        def uncles(self, height, fork=False):
+            return self._slow(MockChain.uncles, height, fork)
+
+    policy = FetchPolicy(threads=ThreadsConfig(api=8, tx=4, trace=2, blocks=4))
+    res = archive(spark, SlowChain(head_height=10_000), str(tmp_path), Range(0, 39),
+                  tables=(DataKind.BLOCKS,), chunk=100, policy=policy)
+    assert res.written == 1
+    got = spans.value
+    assert len(got) == 3 * 40
+    serial = sum(e - s for s, e in got)
+    wall = max(e for _, e in got) - min(s for s, _ in got)
+    events = sorted([(s, 1) for s, _ in got] + [(e, -1) for _, e in got])
+    in_flight = peak = 0
+    for _, d in events:
+        in_flight += d
+        peak = max(peak, in_flight)
+    assert peak <= 4, peak
+    assert wall <= 0.5 * serial, (wall, serial)
+
+
+def test_stream_smoke_backfill_gaps_and_fork(spark, tmp_path):
+    """One small ``run_stream`` on the loop engine: ``--continue`` backfills
+    the window before the head through ``fix`` (T3), a batch synthesizes
+    the heights the head skipped (T4), and a fork at the head keeps both
+    hash-named blocks files (T5)."""
+    from dshackle_archive_spark.streaming.stream_plan import run_stream
+
+    class AdvancingChain(MockChain):  # executors unpickle it by value
+        def head(self):
+            h = self.head_height
+            object.__setattr__(self, "head_height", h + 2)
+            return h
+
+    chain = AdvancingChain(head_height=500, fork_at=frozenset({504}))
+    root = str(tmp_path)
+    archive(spark, chain, root, Range(400, 449), tables=BT, chunk=50, policy=POLICY)
+    delete_files(str(tmp_path / "eth"), ["000000000/range-000000400_000000449.txes.parquet"])
+    st = run_stream(spark, chain, root, tables=BT, policy=POLICY, engine="loop",
+                    continue_from_archive=True, num_batches=2)
+    assert sorted(st.backfilled) == [("blocks", 450, 499), ("transactions", 400, 499)]
+    assert st.archived_heights == [502, 503, 504]
+    files = tree(tmp_path)
+    assert "000000000/range-000000400_000000499.txes.parquet" in files
+    assert "000000000/range-000000450_000000499.blocks.parquet" in files
+    forks = [p for p in files if p.startswith("000000000/000000000/000000504.")
+             and ".block." in p]
+    assert sorted(forks) == sorted(
+        f"000000000/000000000/000000504.{chain.block_hash(504, fork)}.block.parquet"
+        for fork in (False, True))
+    assert len(files) == 3 + 2 * 3 + 1
 
 
 def test_verify_merges_small_ranges_into_islands(spark, tmp_path):

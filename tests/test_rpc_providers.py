@@ -309,3 +309,85 @@ def test_avro_archive_preserves_wire_bytes(spark, tmp_path):
         assert b"\n" in blk  # and genuinely non-compact
     finally:
         srv.shutdown()
+
+
+@pytest.mark.parametrize("transport", ["json-rpc", "dshackle"])
+def test_pooled_fetch_matches_serial_fetch(spark, tmp_path, transport):
+    """A one-group archive fetches its heights on a pool of threads that
+    share one provider: each thread keeps its own connection, so
+    ``--parallel 8`` writes the rows ``--parallel 1`` writes."""
+    import pandas as pd
+
+    from dshackle_archive_spark.core import parse_filename
+    from dshackle_archive_spark.sources.avro_io import read_archive_pdf
+    from dshackle_archive_spark.sources.dshackle import DshackleClient
+
+    from stub_dshackle import start_dshackle_stub
+
+    start = start_stub if transport == "json-rpc" else start_dshackle_stub
+    url, srv = start(EthChainModel(head=300))
+    try:
+        def provider():
+            client = DshackleClient(url) if transport == "dshackle" else None
+            return EthereumRpcProvider(url, client=client)
+
+        tables = (DataKind.BLOCKS, DataKind.TRANSACTIONS, DataKind.TRACES)
+        got = {}
+        for parallel in (1, 8):
+            root = str(tmp_path / f"p{parallel}")
+            policy = FetchPolicy(parallel=parallel, attempts=3, backoff_base_s=0.01)
+            res = archive(spark, provider(), root, Range(100, 139), tables=tables,
+                          chunk=100, policy=policy)
+            assert res.written == 3
+            got[parallel] = {
+                os.path.basename(f): read_archive_pdf([f], parse_filename(f).kind.value)
+                .drop(columns=["archiveTimestamp"])
+                for f in res.files
+            }
+        assert sorted(got[1]) == sorted(got[8])
+        for name, rows in got[1].items():
+            assert len(rows) > 0
+            pd.testing.assert_frame_equal(rows, got[8][name])
+    finally:
+        srv.shutdown()
+
+
+@pytest.mark.parametrize("transport", ["json-rpc", "dshackle"])
+def test_client_threads_keep_their_own_connections(transport):
+    """More threads than cores share one client under a short switch
+    interval: every reply answers its own thread's request."""
+    import sys
+    import threading
+
+    from dshackle_archive_spark.sources.dshackle import DshackleClient
+    from dshackle_archive_spark.sources.rpc import JsonRpcClient
+
+    from stub_dshackle import start_dshackle_stub
+
+    model = EthChainModel(head=200)
+    start = start_stub if transport == "json-rpc" else start_dshackle_stub
+    url, srv = start(model)
+    client = JsonRpcClient(url) if transport == "json-rpc" else DshackleClient(url)
+    wrong, done = [], []
+
+    def worker(t):
+        for h in range(t, 200, 8):
+            blk = client.call("eth_getBlockByNumber", [hex(h), False])
+            if blk["hash"] != model.block_hash(h):
+                wrong.append(h)
+        done.append(t)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+        srv.shutdown()
+    assert sorted(done) == list(range(8)) and wrong == []
+    assert srv.accepts == 8  # one kept-alive connection per thread
