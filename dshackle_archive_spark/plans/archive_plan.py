@@ -82,7 +82,10 @@ def _cap(policy: FetchPolicy, kinds) -> int:
 @dataclass(frozen=True)
 class UnitWriter:
     """Fetch and write one unit: ``writer(lo, hi, kinds)`` returns the
-    write-result row of every file it wrote or skipped.
+    write-result row of every file it wrote or skipped. ``kinds`` lists
+    kind names, each written over ``lo..hi``, or maps a kind name to its
+    ``[start, end]`` pieces inside ``lo..hi``, each written as its own file:
+    a height is fetched once for every kind whose piece covers it.
 
     ``single`` names one file per (height, kind) instead of one range file
     per kind; ``forks`` then puts the block hash in the blocks files' names
@@ -102,10 +105,12 @@ class UnitWriter:
     threads: int = 1
 
     def __call__(self, lo: int, hi: int, kinds) -> list[dict]:
+        pieces = kinds if isinstance(kinds, dict) else {k: [[lo, hi]] for k in kinds}
         heights = range(lo, hi + 1)
 
         def fetch(h):
-            return height_rows(self.provider, h, kinds, self.policy, self.forks)
+            needed = [k for k, ps in pieces.items() if any(a <= h <= b for a, b in ps)]
+            return height_rows(self.provider, h, needed, self.policy, self.forks)
 
         if self.threads > 1 and len(heights) > 1:
             with ThreadPoolExecutor(min(self.threads, len(heights))) as pool:
@@ -113,20 +118,22 @@ class UnitWriter:
         else:
             fetched = [fetch(h) for h in heights]
         out = []
-        for kind in kinds:
+        for kind, ps in pieces.items():
             dk = DataKind(kind)
-            if not self.single:
-                rel = range_file_path(Range(lo, hi), dk, fmt=self.fmt)
-                out.append(self._write(rel, dk, [r for f in fetched for r in f[kind]], lo, hi))
-                continue
-            for h, f in zip(heights, fetched):
-                if dk == DataKind.BLOCKS:
-                    files = [([r], r["blockId"] if self.forks else None) for r in f[kind]]
-                else:
-                    files = [(f[kind], None)]
-                for rows, name_hash in files:
-                    rel = single_file_path(h, dk, block_hash=name_hash, fmt=self.fmt)
-                    out.append(self._write(rel, dk, rows, h, h))
+            for a, b in ps:
+                part = fetched[a - lo:b - lo + 1]
+                if not self.single:
+                    rel = range_file_path(Range(a, b), dk, fmt=self.fmt)
+                    out.append(self._write(rel, dk, [r for f in part for r in f[kind]], a, b))
+                    continue
+                for h, f in zip(range(a, b + 1), part):
+                    if dk == DataKind.BLOCKS:
+                        files = [([r], r["blockId"] if self.forks else None) for r in f[kind]]
+                    else:
+                        files = [(f[kind], None)]
+                    for rows, name_hash in files:
+                        rel = single_file_path(h, dk, block_hash=name_hash, fmt=self.fmt)
+                        out.append(self._write(rel, dk, rows, h, h))
         return out
 
     def _write(self, rel: str, kind: DataKind, rows: list, lo: int, hi: int) -> dict:
@@ -147,9 +154,10 @@ def fetch_write(
     fmt: str = "parquet",
     compression: str = "zstd",
 ) -> list:
-    """Fetch and write ``units`` (``[lo, hi, kind names]``, one range file
-    per kind advertising ``lo``..``hi``) in ONE Spark job with no shuffle;
-    returns the write-result rows.
+    """Fetch and write ``units`` (``[lo, hi, kinds]``, ``kinds`` as in
+    ``UnitWriter``: one range file per kind advertising ``lo``..``hi``, or
+    per piece) in ONE Spark job with no shuffle; returns the write-result
+    rows.
 
     The job runs ``min(cap, units, defaultParallelism)`` tasks, ``cap``
     being the tightest fetch cap of the requested kinds, and each task

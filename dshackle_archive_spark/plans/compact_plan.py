@@ -26,17 +26,18 @@ rewritten or deleted).
 
 Spark phase — ONE ``mapInPandas`` job (``runner.run_units``) over the
 passing chunks. A task takes its chunks one at a time: it reads the chunk's
-files, reconciles them (A5/A7: the block heights are one island equal to
-the chunk, one row each; J6: txids promised by the blocks == txids copied)
-and only then writes each rewritten kind's range file (tmp+rename). A chunk
-that fails the reconciliation writes nothing and keeps its sources, so
-nothing is ever rolled back. The driver then deletes the sources of the
+files, reconciles them with ``core.content.island_stats``, the content
+kernel ``verify`` also runs (A5/A7: the block heights are one island equal
+to the chunk, one row each; J6: every block JSON is well formed and the
+txids it lists == txids copied, as multisets), and only then writes each
+rewritten kind's range file (tmp+rename). A chunk that fails the
+reconciliation writes nothing and keeps its sources, so nothing is ever
+rolled back. The driver then deletes the sources of the
 compacted chunks (or swaps them out of the snapshot manifest).
 """
 
 from __future__ import annotations
 
-import json
 import os
 from collections import Counter
 from dataclasses import dataclass, field
@@ -44,6 +45,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from ..core.content import island_stats
 from ..core.filenames import DataKind, range_file_path
 from ..core.ranges import Range, merge_ranges
 from ..sources.archive import delete_files, inventory_rows
@@ -119,34 +121,6 @@ def _gate(
     return skipped, passing
 
 
-def _reconciles(data: dict, c_start: int, c_end: int, tx_field: str | None) -> bool:
-    """J6/A7 over one chunk's rows (kind -> pandas frame): the block
-    heights are exactly the chunk, one row each (A5), and with ``tx_field``
-    the txids the blocks' JSON lists equal the copied txids, as multisets."""
-    blocks = data.get("blocks")
-    if blocks is None:
-        return True
-    h = blocks["height"]
-    if not (len(h) == h.nunique() == c_end - c_start + 1
-            and h.min() == c_start and h.max() == c_end):
-        return False
-    if tx_field is None or "transactions" not in data:
-        return True
-    promised: Counter = Counter()
-    for raw in blocks["json"]:
-        try:
-            doc = json.loads(raw)
-        except (TypeError, ValueError):
-            return False
-        if not isinstance(doc, dict):
-            return False
-        listed = doc.get(tx_field) or []
-        if not isinstance(listed, list) or not all(isinstance(t, str) for t in listed):
-            return False
-        promised.update(listed)
-    return promised == Counter(data["transactions"]["txid"])
-
-
 REWRITE_SCHEMA = T.StructType(
     [
         T.StructField("c_start", T.LongType(), False),
@@ -173,7 +147,15 @@ def _rewrite_chunk(base: str, c_start: int, c_end: int, plan: ChunkPlan, fmt: st
     for kind, (paths, _write) in plan.items():
         rows = read_archive_pdf([os.path.join(base, p) for p in paths], kind)
         data[kind] = rows.sort_values(["height"] if kind == "blocks" else ["height", "index"])
-    ok = _reconciles(data, c_start, c_end, tx_field)
+    # A5/A7: the block heights are exactly the chunk, one row each; J6 (with
+    # ``tx_field``): every block JSON is well formed and the txids it lists
+    # equal the copied txids, as multisets
+    s = island_stats(data, tx_field)
+    ok = "blocks" not in data or (
+        s["n_rows"] == s["n_heights"] == c_end - c_start + 1
+        and (s["h_min"], s["h_max"]) == (c_start, c_end)
+        and (tx_field is None or "transactions" not in data
+             or (not s["bad_tx_list"] and s["transactions_same"])))
     out = []
     for kind, (_paths, write) in plan.items():
         rows, location = data[kind], None

@@ -6,11 +6,11 @@ the requested range minus every listed file's range
 (``core.groups.missing_ranges`` over ``sources.archive.inventory_rows``,
 i.e. ``core.ranges.subtract_ranges``; the inventory is one row per file,
 metadata-scale). Each kind's gaps are cut at absolute chunk boundaries into
-file pieces, and every piece becomes one unit carrying the kinds missing
-over exactly that piece (``only_include``, P6). All units are then fetched
-and written in ONE Spark job with no shuffle (``archive_plan.fetch_write``,
-``overwrite=False`` so racing writers keep existing files, S13): a task
-fetches each height of a piece once and writes every missing kind's file.
+file pieces; overlapping pieces (of different kinds, inside one chunk) form
+one unit. All units are then fetched and written in ONE Spark job with no
+shuffle (``archive_plan.fetch_write``, ``overwrite=False`` so racing writers
+keep existing files, S13): a task fetches each height of a unit once, for
+the kinds missing there (``only_include``, P6), and writes each piece's file.
 The reference loops gap by gap — fine for its in-process writes, but a
 fragmented archive (thousands of small gaps) would serialize thousands of
 ~100 ms Spark job launches.
@@ -61,15 +61,20 @@ def fix(
         for kind, lo, hi in work:
             by_kind.setdefault(kind, []).append(Range(lo, hi))
         # file pieces: gaps cut at absolute chunk boundaries, so restored
-        # files carry exactly the reference's names for those gaps
-        pieces: dict[tuple[int, int], list[str]] = {}
-        for kind, ranges in by_kind.items():
-            for r in merge_ranges(ranges):
-                for p in r.split_chunks(chunk):
-                    pieces.setdefault((p.start, p.end), []).append(kind)
-        rows = fetch_write(spark, provider, root,
-                           [[lo, hi, ks] for (lo, hi), ks in sorted(pieces.items())],
-                           policy, run="fix", fmt=fmt, compression=compression)
+        # files carry exactly the reference's names for those gaps; pieces
+        # that overlap (all inside one chunk) share one unit, which fetches
+        # each height once for every kind missing there
+        pieces = sorted((p.start, p.end, kind) for kind, ranges in by_kind.items()
+                        for r in merge_ranges(ranges) for p in r.split_chunks(chunk))
+        units: list = []
+        for lo, hi, kind in pieces:
+            if not units or lo > units[-1][1]:
+                units.append([lo, hi, {}])
+            unit = units[-1]
+            unit[1] = max(unit[1], hi)
+            unit[2].setdefault(kind, []).append([lo, hi])
+        rows = fetch_write(spark, provider, root, units, policy, run="fix", fmt=fmt,
+                           compression=compression)
         for kind in by_kind:
             results.append(archive_result(spark, [r for r in rows if r["type"] == kind]))
     out = FixResult(missing=work, archived=results)

@@ -1,10 +1,10 @@
 """One Spark job over a driver-built list of work units.
 
-``archive``, ``fix`` and ``compact`` each run their whole Spark phase as ONE
-``mapInPandas`` job with no shuffle: on this archiver's inputs (tens to
-thousands of files per call) task and job launches, not data, set the
-latency, so the per-record loop stays inside one task rather than spreading
-over engine stages.
+``archive``, ``fix``, ``compact`` and ``verify`` each run their whole Spark
+phase as ONE ``mapInPandas`` job with no shuffle: on this archiver's inputs
+(tens to thousands of files per call) task and job launches, not data, set
+the latency, so the per-record loop stays inside one task rather than
+spreading over engine stages.
 """
 
 from __future__ import annotations

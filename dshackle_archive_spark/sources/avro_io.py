@@ -418,20 +418,17 @@ def read_archive_pdf(paths: list[str], kind: str):
 
 def read_avro_df(
     spark,
-    paths: list,
+    paths: list[str],
     spark_schema,
     with_path: bool = False,
     expected_record: str | None = None,
-    file_cols=(),
 ):
     """Distributed Avro read: tasks decode whole files via ``mapInPandas``.
 
     Timestamp-millis longs are converted according to the target Spark
     schema; unknown writer fields are dropped, missing ones null-filled.
     ``with_path=True`` appends a ``_path`` column (the Avro analog of
-    ``input_file_name()``). ``file_cols`` (``StructField``s) are per-file
-    columns: each item of ``paths`` is then a tuple ``(path, *values)`` and
-    every record of that file carries the values in those columns.
+    ``input_file_name()``).
 
     The path rows become a local table (built from a pandas frame, so it
     travels to the JVM as Arrow with no Python worker pass of its own),
@@ -448,72 +445,37 @@ def read_avro_df(
     from ..session import ship_package
 
     ship_package(spark)
-    file_cols = list(file_cols)
-    extra = [f.name for f in file_cols]
-    out_fields = list(spark_schema.fields) + file_cols
+    out_fields = list(spark_schema.fields)
     if with_path:
         out_fields.append(T.StructField("_path", T.StringType(), False))
 
     def gen(batches):
         for pdf in batches:
-            for path, *values in zip(pdf["path"].tolist(), *(pdf[c].tolist() for c in extra)):
+            for path in pdf["path"].tolist():
                 out = read_avro_pdf([path], spark_schema, expected_record=expected_record)
-                for c, v in zip(extra, values):
-                    out[c] = v
                 if with_path:
                     out["_path"] = path
                 yield out
 
-    rows = [(p,) if isinstance(p, str) else tuple(p) for p in paths]
-    in_schema = T.StructType(
-        [T.StructField("path", T.StringType(), False)]
-        + [T.StructField(f.name, f.dataType, True) for f in file_cols]
-    )
-    table = pd.DataFrame(rows, columns=in_schema.names)
-    return spark.createDataFrame(table, in_schema).mapInPandas(
+    table = pd.DataFrame({"path": list(paths)})
+    return spark.createDataFrame(table, "path string").mapInPandas(
         gen, schema=T.StructType(out_fields)
     )
 
 
-def read_archive_data(spark, full_paths: list, kind: str, file_cols=()):
+def read_archive_data(spark, full_paths: list[str], kind: str):
     """Format-dispatching archive read: parquet natively, ``.avro`` through
     the container codec — both with a ``_path`` column, unioned into one
-    DataFrame so verify is format-agnostic.
-
-    ``file_cols`` works as in ``read_avro_df``: items of ``full_paths`` are
-    then ``(path, *values)`` tuples. Parquet rows get the values through a
-    broadcast join on the file's base name (unique within a kind, since it
-    encodes range and hash); the broadcast side is a local table built from
-    a pandas frame, so it needs no Python worker pass."""
-    import pandas as pd
+    DataFrame."""
     from pyspark.sql import functions as F
 
     from ..schemas import TABLE_SCHEMAS
 
-    items = [(p,) if isinstance(p, str) else tuple(p) for p in full_paths]
-    pq = [t for t in items if t[0].endswith(".parquet")]
-    av = [t for t in items if t[0].endswith(".avro")]
+    pq = [p for p in full_paths if p.endswith(".parquet")]
+    av = [p for p in full_paths if p.endswith(".avro")]
     parts = []
     if pq:
-        df = spark.read.parquet(*(t[0] for t in pq)).withColumn("_path", F.input_file_name())
-        if file_cols:
-            from pyspark.sql import types as T
-
-            key_schema = T.StructType(
-                [T.StructField("_base", T.StringType(), False), *file_cols]
-            )
-            keys = spark.createDataFrame(
-                pd.DataFrame(
-                    [(os.path.basename(t[0]), *t[1:]) for t in pq], columns=key_schema.names
-                ),
-                key_schema,
-            )
-            df = (
-                df.withColumn("_base", F.element_at(F.split(F.col("_path"), "/"), -1))
-                .join(F.broadcast(keys), "_base", "left")
-                .drop("_base")
-            )
-        parts.append(df)
+        parts.append(spark.read.parquet(*pq).withColumn("_path", F.input_file_name()))
     if av:
         parts.append(
             read_avro_df(
@@ -522,7 +484,6 @@ def read_archive_data(spark, full_paths: list, kind: str, file_cols=()):
                 TABLE_SCHEMAS[kind],
                 with_path=True,
                 expected_record=_RECORD_NAMES.get(kind),
-                file_cols=file_cols,
             )
         )
     if not parts:

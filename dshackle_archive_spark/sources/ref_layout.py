@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import os
 from datetime import datetime, timezone
-from typing import Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -467,12 +466,3 @@ def write_notifications(write_results: DataFrame, root: str, run_ts: str) -> str
     notifications_df(write_results).coalesce(1).write.mode("append").json(out_dir)
     return out_dir
 
-
-def read_archive_files(spark, root: str, blockchain: str, paths: Iterable[str], kind: str) -> DataFrame:
-    """Read reference-layout files (parquet and/or avro) with their source
-    path attached — thin wrapper over the format-dispatching reader."""
-    from .avro_io import read_archive_data
-
-    base = _join_path(root, blockchain.lower())
-    full = [os.path.join(base, p) for p in paths]
-    return read_archive_data(spark, full, kind)

@@ -67,10 +67,9 @@ def test_range_file_reads():
 
 
 def test_spark_df_read_is_one_job(spark, tmp_path):
-    """N files decode in ONE Spark job (no shuffle ahead of the decode), the
-    path rows reach the JVM as a local table (a Python-side RDD would add a
-    Python worker pass to every read task), and per-file columns ride along
-    with each file's records."""
+    """N files decode in ONE Spark job (no shuffle ahead of the decode), and
+    the path rows reach the JVM as a local table (a Python-side RDD would
+    add a Python worker pass to every read task)."""
     from pyspark.sql import types as T
 
     schema = {"type": "record", "name": "S", "fields": [{"name": "v", "type": "long"}]}
@@ -78,13 +77,8 @@ def test_spark_df_read_is_one_job(spark, tmp_path):
     for i in range(6):
         p = str(tmp_path / f"f{i}.avro")
         write_avro_records(p, schema, [{"v": i * 10 + j} for j in range(3)])
-        files.append((p, i))
-    df = read_avro_df(
-        spark,
-        files,
-        T.StructType([T.StructField("v", T.LongType())]),
-        file_cols=[T.StructField("file_no", T.LongType())],
-    )
+        files.append(p)
+    df = read_avro_df(spark, files, T.StructType([T.StructField("v", T.LongType())]))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan
     sc = spark.sparkContext
@@ -94,9 +88,7 @@ def test_spark_df_read_is_one_job(spark, tmp_path):
     finally:
         sc.setJobGroup(None, None)
     assert len(sc.statusTracker().getJobIdsForGroup("avro-read-jobs")) == 1
-    assert sorted((r["file_no"], r["v"]) for r in rows) == [
-        (i, i * 10 + j) for i in range(6) for j in range(3)
-    ]
+    assert sorted(r["v"] for r in rows) == [i * 10 + j for i in range(6) for j in range(3)]
 
 
 @needs_fixtures

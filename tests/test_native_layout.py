@@ -48,28 +48,6 @@ def test_append_mode_accumulates(spark, tmp_path):
     assert out.count() == 200
 
 
-def test_native_verify(spark, tmp_path):
-    from dshackle_archive_spark.plans.verify_plan import verify_native
-    from dshackle_archive_spark.sources.fetcher import fetch_table_for_heights
-
-    blocks = fetch_blocks(spark, CHAIN, Range(1000, 1199), POLICY)
-    txes = fetch_table_for_heights(spark, CHAIN, Range(1000, 1199), "transactions", POLICY)
-    ARC.write_table(blocks, str(tmp_path), "ETH", "blocks")
-    ARC.write_table(txes, str(tmp_path), "ETH", "transactions")
-    rep = verify_native(spark, CHAIN, str(tmp_path), Range(1000, 1199), chunk=100)
-    rows = {r["g_start"]: r for r in rep.collect()}
-    assert set(rows) == {1000, 1100}
-    assert all(r["ok"] for r in rows.values())
-    # corrupt: append a duplicate + drop txes for one height range by writing
-    # a second copy of one block slice
-    dup = blocks.filter(F.col("height").between(1050, 1059))
-    ARC.write_table(dup, str(tmp_path), "ETH", "blocks")
-    rep2 = verify_native(spark, CHAIN, str(tmp_path), Range(1000, 1199), chunk=100)
-    bad = {r["g_start"]: r for r in rep2.collect()}
-    assert not bad[1000]["ok"] and bad[1000]["n_rows"] == bad[1000]["n_heights"] + 10
-    assert bad[1100]["ok"]
-
-
 def test_sql_views_over_archive(spark, tmp_path):
     from dshackle_archive_spark.sources.fetcher import fetch_table_for_heights
 

@@ -912,6 +912,61 @@ def test_stream_smoke_backfill_gaps_and_fork(spark, tmp_path):
     assert len(files) == 3 + 2 * 3 + 1
 
 
+def test_fix_fetches_shared_heights_once(spark, tmp_path):
+    """Gap pieces of different kinds that overlap share one unit: the
+    txes piece 400..499 and the blocks piece 450..499 fetch each height's
+    block once, and still write the files (names and tables) that archiving
+    each piece on its own writes."""
+    from pyspark.accumulators import AccumulatorParam
+
+    from dshackle_archive_spark.sources.avro_io import read_archive_pdf
+
+    class Heights(AccumulatorParam):
+        def zero(self, value):
+            return []
+
+        def addInPlace(self, a, b):
+            return a + b
+
+    calls = spark.sparkContext.accumulator([], Heights())
+
+    class CountingChain(MockChain):  # executors unpickle it by value
+        def block(self, height, fork=False):
+            calls.add([height])
+            return super().block(height, fork)
+
+        def block_json(self, height, fork=False):
+            return json.dumps(MockChain.block(self, height, fork)).encode()
+
+    chain = CountingChain(head_height=10_000)
+    new, old = str(tmp_path / "new"), str(tmp_path / "old")
+    archive(spark, CHAIN, new, Range(400, 449), tables=BT, chunk=50, policy=POLICY)
+    delete_files(os.path.join(new, "eth"), ["000000000/range-000000400_000000449.txes.parquet"])
+    calls.value = []  # driver-side reset
+    res = fix(spark, chain, new, Range(400, 499), tables=BT, chunk=100, policy=POLICY)
+    assert sorted(res.missing) == [("blocks", 450, 499), ("transactions", 400, 499)]
+    assert sorted(calls.value) == list(range(400, 500))
+    archive(spark, CHAIN, old, Range(400, 449), tables=(DataKind.BLOCKS,), chunk=50,
+            policy=POLICY)
+    archive(spark, CHAIN, old, Range(450, 499), tables=(DataKind.BLOCKS,), chunk=100,
+            policy=POLICY)
+    archive(spark, CHAIN, old, Range(400, 499), tables=(DataKind.TRANSACTIONS,), chunk=100,
+            policy=POLICY)
+    files = sorted(tree(new))
+    assert files == sorted(tree(old)) == [
+        "000000000/range-000000400_000000449.blocks.parquet",
+        "000000000/range-000000400_000000499.txes.parquet",
+        "000000000/range-000000450_000000499.blocks.parquet",
+    ]
+    for rel in files:
+        kind = parse_filename(rel).kind
+        by = ["height"] if kind == DataKind.BLOCKS else ["height", "index"]
+        a, b = (read_archive_pdf([os.path.join(r, "eth", rel)], kind.value)
+                .drop(columns=["archiveTimestamp"]).sort_values(by, ignore_index=True)
+                for r in (new, old))
+        pd.testing.assert_frame_equal(a, b)
+
+
 def test_verify_merges_small_ranges_into_islands(spark, tmp_path):
     """W4 (verify.rs:237-267): adjacent ≤10-block groups are content-checked
     as one island — a parent-hash break BETWEEN two 10-block files is
@@ -1055,11 +1110,14 @@ def test_verify_latest_stream_archive_keeps_every_file(spark, tmp_path):
     assert tree(tmp_path) == before
 
 
-def _damaged_avro_archive(spark, root, groups):
-    """An Avro archive of ``groups`` 100-block groups from height 0 with one
-    of each damage: a gap (group 100..199 gone), a partial group (200..299
+def _damaged_archive(spark, root, groups, fmt):
+    """An archive of ``groups`` 100-block groups from height 0 with one of
+    each damage: a gap (group 100..199 gone), a partial group (200..299
     without txes), an overlapping range file (310..319 inside 300..399) and
     a broken parent link (height 50)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from dshackle_archive_spark.sources.avro_io import (
         read_avro_records,
         read_avro_schema,
@@ -1067,50 +1125,53 @@ def _damaged_avro_archive(spark, root, groups):
     )
 
     archive(spark, CHAIN, root, Range(0, groups * 100 - 1), tables=BT, chunk=100,
-            policy=POLICY, fmt="avro")
+            policy=POLICY, fmt=fmt)
     d = os.path.join(root, "eth", "000000000")
 
     def name(start, end, ext):
-        return os.path.join(d, f"range-{start:09d}_{end:09d}.{ext}.avro")
+        return os.path.join(d, f"range-{start:09d}_{end:09d}.{ext}.{fmt}")
+
+    def rewrite(src, dst, edit):
+        if fmt == "avro":
+            write_avro_records(dst, read_avro_schema(src), edit(list(read_avro_records(src))))
+        else:
+            table = pq.read_table(src)
+            pq.write_table(pa.Table.from_pylist(edit(table.to_pylist()), table.schema), dst)
 
     for ext in ("blocks", "txes"):
         os.remove(name(100, 199, ext))
     os.remove(name(200, 299, "txes"))
     for ext in ("blocks", "txes"):
-        src = name(300, 399, ext)
-        recs = [r for r in read_avro_records(src) if 310 <= r["height"] <= 319]
-        write_avro_records(name(310, 319, ext), read_avro_schema(src), recs)
-    src = name(0, 99, "blocks")
-    recs = list(read_avro_records(src))
-    recs[50]["parentId"] = "0" * 64
-    write_avro_records(src, read_avro_schema(src), recs)
+        rewrite(name(300, 399, ext), name(310, 319, ext),
+                lambda recs: [r for r in recs if 310 <= r["height"] <= 319])
+
+    def break_link(recs):
+        recs[50]["parentId"] = "0" * 64
+        return recs
+
+    rewrite(name(0, 99, "blocks"), name(0, 99, "blocks"), break_link)
 
 
 def test_verify_issues_constant_jobs_on_damaged_archive(spark, tmp_path):
     """verify's metadata work runs on the driver and its content checks in
-    one fused query, so its Spark job count does not grow with the group
-    count (it used to issue ~105 jobs per call)."""
+    one job of at most ``defaultParallelism`` tasks, each reading and
+    checking whole islands, so its Spark job count does not grow with the
+    group count (it used to issue ~105 jobs per call) or the format
+    (parquet used to add a schema-inference and a broadcast job per kind)."""
     sc = spark.sparkContext
 
-    def run(groups):
-        root = str(tmp_path / f"g{groups}")
-        _damaged_avro_archive(spark, root, groups)
-        group = f"verify-jobs-{groups}"
-        sc.setJobGroup(group, "count verify jobs")
-        try:
-            rep = verify(spark, CHAIN, root, Range(0, groups * 100 - 1), tables=BT,
-                         dry_run=True)
-        finally:
-            sc.setJobGroup(None, None)
-        return rep, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    (rep4, jobs4), (rep20, jobs20) = run(4), run(20)
-    for rep, groups in ((rep4, 4), (rep20, 20)):
-        assert sorted((f["start"], f["end"], f["reason"]) for f in rep.failures) == [
-            (0, 99, "blocks_content"), (200, 299, "incomplete"), (310, 319, "overlap_loser"),
-        ]
-        assert rep.groups_total == groups and rep.groups_ok == groups - 3
-    assert jobs4 == jobs20 <= 8, f"4 groups: {jobs4} jobs, 20 groups: {jobs20} jobs"
+    for fmt in ("avro", "parquet"):
+        for groups in (4, 20):
+            root = str(tmp_path / f"{fmt}{groups}")
+            _damaged_archive(spark, root, groups, fmt)
+            rep, tasks = _jobs_and_tasks(spark, f"verify-jobs-{fmt}-{groups}", lambda: verify(
+                spark, CHAIN, root, Range(0, groups * 100 - 1), tables=BT, dry_run=True))
+            assert sorted((f["start"], f["end"], f["reason"]) for f in rep.failures) == [
+                (0, 99, "blocks_content"), (200, 299, "incomplete"), (310, 319, "overlap_loser"),
+            ]
+            assert rep.groups_total == groups and rep.groups_ok == groups - 3
+            assert len(tasks) == 1, f"{fmt}, {groups} groups: {len(tasks)} jobs"
+            assert tasks[0] <= sc.defaultParallelism, (fmt, groups, tasks)
 
 
 def test_verify_triage_attaches_hashless_files_after_fork_resolution():

@@ -10,9 +10,10 @@ reference lifecycle END-TO-END under the failure mode its pieces exist for:
    (incomplete group) and corrupt another chunk's blocks file (broken
    parent-hash linkage at one height);
 3. ``verify --snapshot --fix.clean`` — and, in chaos mode, SIGKILL every
-   live executor DURING the content checks (right after the kind reads are
-   wired, so the aggregation jobs hit dead executors and must survive via
-   standalone-worker respawn + stage retry);
+   live executor DURING the content checks (as soon as the content job has
+   a running stage, so its tasks hit dead executors and must survive via
+   standalone-worker respawn + task retry; a job that ends before the
+   watcher sees it leaves ``killed`` unset, a misfire);
 4. ``vacuum`` (keep_last=1) so the pruned files leave the disk;
 5. ``fix --snapshot`` re-archives the gaps and commits them add-only.
 
@@ -142,39 +143,42 @@ def main() -> int:
                 base, "000000000", "range-000000200_000000299.blocks.parquet"
             ))
 
-            # arm the executor kill DURING verify's content checks: fire
-            # once, right after the SECOND kind read is wired (blocks +
-            # txes), so the content aggregation jobs run into dead
-            # executors and must finish via worker respawn + stage retry
-            real_read_kind = verify_plan._read_kind
-            state = {"calls": 0}
+            # SIGKILL every live executor once verify's content job (one
+            # task per island: read, check, one stats row) has a running
+            # stage: its tasks die with their executors and must finish via
+            # worker respawn + task retry
+            real_check = verify_plan._check_islands
+            tracker = spark.sparkContext.statusTracker()
+            done = threading.Event()
 
-            def killing_read_kind(*a, **kw):
-                out = real_read_kind(*a, **kw)
-                state["calls"] += 1
-                if state["calls"] == 2 and res["killed"] is None:
-                    victims = _executor_pids()
-                    if victims:
-                        res["killed"] = victims[0]
+            def kill_when_running():
+                while not tracker.getActiveStageIds():
+                    if done.wait(0.01):
+                        return  # the job ended unseen: the probe misfired
+                victims = _executor_pids()
+                if victims:
+                    res["killed"] = victims[0]
+                    for pid in victims:
+                        try:
+                            os.kill(pid, signal.SIGKILL)
+                        except OSError:
+                            pass
 
-                        def _kill():
-                            for pid in victims:
-                                try:
-                                    os.kill(pid, signal.SIGKILL)
-                                except OSError:
-                                    pass
+            def killing_check(*a, **kw):
+                killer = threading.Thread(target=kill_when_running, daemon=True)
+                killer.start()
+                try:
+                    return real_check(*a, **kw)
+                finally:
+                    done.set()
+                    killer.join()
 
-                        t = threading.Timer(0.5, _kill)
-                        t.daemon = True
-                        t.start()
-                return out
-
-            verify_plan._read_kind = killing_read_kind
+            verify_plan._check_islands = killing_check
 
         rep = verify(spark, chain, work, rng, tables=tables,
                      fix_clean=True, snapshot=True)
         if mode == "chaos":
-            verify_plan._read_kind = real_read_kind
+            verify_plan._check_islands = real_check
         res["verify_failures"] = len(rep.failures)
         res["pruned"] = len(rep.pruned_from_snapshot)
 
